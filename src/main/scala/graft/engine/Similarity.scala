@@ -1164,7 +1164,7 @@ object Similarity {
     val out = TempIo.createTempDir("graft-annserve-out-")
     val queries = Tables.embeddings(spark, sfDir)
       .filter($"vec_id" % Q241QueryMod === 0)
-    val q = spark.readStream
+    val q = graft.streaming.Streaming.startStream(spark)(spark.readStream
       .schema(queries.schema)
       .option("pathGlobFilter", "chunk*.parquet")
       .option("maxFilesPerTrigger", "1")
@@ -1196,8 +1196,7 @@ object Similarity {
           .write.mode("overwrite").parquet(s"$out/epoch=$epochId")
       }
       .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()))
     q.awaitTermination()
     TempIo.deleteRecursively(ckpt)
     // src is the memoized chunk stage — reclaimed at JVM exit, not here

@@ -1080,54 +1080,17 @@ object Similarity {
   private val Q241Chunks = 3
   private val Q241K = 10
 
-  /** sfDir → (events-fixture stamp, staged query-chunk dir): q241's
-    * streamed query chunks are a pure function of the embeddings
-    * fixture (vec_id filter + pmod carve), yet each call re-derived
-    * them through [[Q241Chunks]] scan+coalesce(1) Spark jobs — the
-    * fixture-prep-inside-the-timed-query disease the streaming family
-    * already cured (pmodChunks discipline: fixture-stamp validated,
-    * rebuilt on drift, chunk bytes identical by determinism of the
-    * carve). Chunk→batch order is result-invisible here by the
-    * operator's own contract (no cross-batch state; epoch-keyed
-    * overwrite; final read re-sorts), so memoizing the staged files
-    * cannot change the declared result. */
-  private val annChunkCache =
-    new scala.collection.mutable.HashMap[String, (String, String)]
-
-  private def annQueryChunks(spark: SparkSession, sfDir: String): String =
-    synchronized {
+  /** q241's streamed query chunks: the query subset of the embeddings
+    * fixture carved by vec_id pmod [[Q241Chunks]]. Chunk→batch order is
+    * result-invisible here by the operator's own contract (no
+    * cross-batch state; epoch-keyed overwrite; final read re-sorts), so
+    * sharing the carve cannot change the declared result. */
+  private[graft] def annQueryChunks(spark: SparkSession, sfDir: String): String =
+    graft.streaming.Carve(spark, sfDir, "annQueryChunks", "embeddings") {
       import spark.implicits._
-      val stamp = graft.streaming.Streaming.fixtureStamp(
-        spark, s"$sfDir/embeddings.parquet")
-      val cached = annChunkCache.get(sfDir).collect {
-        case (`stamp`, d) if (1 to Q241Chunks).forall(i =>
-          new java.io.File(s"$d/chunk$i.parquet").exists()) => d
-      }
-      cached.getOrElse {
-        val src = TempIo.createTempDir("graft-annserve-src-")
-        val queries = Tables.embeddings(spark, sfDir)
-          .filter($"vec_id" % Q241QueryMod === 0)
-        (1 to Q241Chunks).foreach { i =>
-          val dir = s"$src/stage$i"
-          queries.filter(pmod($"vec_id", lit(Q241Chunks)) === i - 1)
-            .coalesce(1).write.parquet(dir)
-          val part = new java.io.File(dir).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dest = java.nio.file.Paths.get(s"$src/chunk$i.parquet")
-          java.nio.file.Files.move(part.toPath, dest)
-          // pinned, strictly increasing mtimes: batch membership is
-          // result-invisible, but a DETERMINISTIC replay order keeps
-          // runs byte-comparable (same epoch → same file)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(
-              1000000000000L + i * 60000L))
-          TempIo.deleteRecursively(dir)
-        }
-        graft.engine.MemoTrace.built(s"annQueryChunks($sfDir)")
-        TempIo.deleteAtExit(src)
-        annChunkCache(sfDir) = (stamp, src)
-        src
-      }
+      val queries = Tables.embeddings(spark, sfDir)
+        .filter($"vec_id" % Q241QueryMod === 0)
+      (1 to Q241Chunks).map(i => queries.filter(pmod($"vec_id", lit(Q241Chunks)) === i - 1))
     }
 
   /** q241 — STREAMING ANN serving: the q73 IVF index turned into the
@@ -1151,7 +1114,6 @@ object Similarity {
     * distributed in the sink (no driver materialization). */
   def q241StreamAnnServe(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val index = ivfAssigned(spark, sfDir).localCheckpoint()
     // materialized like `index`: the foreachBatch closure re-plans its
     // captured frames EVERY micro-batch, and a lazy `cent` would re-run
@@ -1160,50 +1122,40 @@ object Similarity {
     // posture holds only if the codebook is pinned
     val cent = centroidArrays(spark, sfDir).localCheckpoint()
     val src = annQueryChunks(spark, sfDir)
-    val ckpt = TempIo.createTempDir("graft-annserve-ckpt-")
-    val out = TempIo.createTempDir("graft-annserve-out-")
     val queries = Tables.embeddings(spark, sfDir)
       .filter($"vec_id" % Q241QueryMod === 0)
-    val q = graft.streaming.Streaming.startStream(spark)(spark.readStream
-      .schema(queries.schema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .transform(graft.plans.PlanProbe.record).writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val byCell = Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("cell"))
-        val qc = batch
-          .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-          .withColumn("q_norm2", dot(col("q_emb"), col("q_emb")))
-          .crossJoin(broadcast(cent))
-          .withColumn("score",
-            cosinePre(col("q_emb"), col("c"), col("q_norm2"), col("cnorm2")))
-          .withColumn("rn", row_number().over(byCell))
-          .filter(col("rn") === 1)
-          .select(col("cell"), col("query_id"), col("q_emb"), col("q_norm2"))
-        val topk = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        index.join(broadcast(qc), "cell")
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            cosinePre(col("q_emb"), col("embedding"),
-              col("q_norm2"), col("norm2")).as("cos"))
-          .withColumn("rank", row_number().over(topk))
-          .filter(col("rank") <= Q241K)
-          .select(col("query_id"), col("rank"), col("vec_id"),
-            round(col("cos"), 6).as("cos"))
-          .write.mode("overwrite").parquet(s"$out/epoch=$epochId")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    TempIo.deleteRecursively(ckpt)
-    // src is the memoized chunk stage — reclaimed at JVM exit, not here
-    TempIo.deleteAtExit(out)
-    spark.read.parquet(out)
-      .select($"query_id", $"rank", $"vec_id", $"cos")
-      .orderBy($"query_id", $"rank")
+    graft.streaming.Replay.run(spark) { r =>
+      val out = r.resultDir("graft-annserve-out-")
+      r.drain(graft.streaming.Carve.stream(spark, src, queries.schema))(
+        _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+          val byCell = Window.partitionBy(col("query_id"))
+            .orderBy(col("score").desc, col("cell"))
+          val qc = batch
+            .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+            .withColumn("q_norm2", dot(col("q_emb"), col("q_emb")))
+            .crossJoin(broadcast(cent))
+            .withColumn("score",
+              cosinePre(col("q_emb"), col("c"), col("q_norm2"), col("cnorm2")))
+            .withColumn("rn", row_number().over(byCell))
+            .filter(col("rn") === 1)
+            .select(col("cell"), col("query_id"), col("q_emb"), col("q_norm2"))
+          val topk = Window.partitionBy(col("query_id"))
+            .orderBy(col("cos").desc, col("vec_id"))
+          index.join(broadcast(qc), "cell")
+            .filter(col("vec_id") =!= col("query_id"))
+            .select(col("query_id"), col("vec_id"),
+              cosinePre(col("q_emb"), col("embedding"),
+                col("q_norm2"), col("norm2")).as("cos"))
+            .withColumn("rank", row_number().over(topk))
+            .filter(col("rank") <= Q241K)
+            .select(col("query_id"), col("rank"), col("vec_id"),
+              round(col("cos"), 6).as("cos"))
+            .write.mode("overwrite").parquet(s"$out/epoch=$epochId")
+        })
+      spark.read.parquet(out)
+        .select($"query_id", $"rank", $"vec_id", $"cos")
+        .orderBy($"query_id", $"rank")
+    }
   }
 
   /** The drained serve result equals batch IVF (q73's plan) over the

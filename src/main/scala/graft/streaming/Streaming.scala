@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ArtifactBridge
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.engine.{Tables, TempIo}
@@ -27,8 +25,11 @@ import graft.engine.{Tables, TempIo}
   * windowed agg carries watermark-bounded state; dedup state is likewise
   * watermark-bounded in production (`dropDuplicatesWithinWatermark`).
   *
-  * Every stream starts through [[startStream]], so its generated code is
-  * compiled once per JVM rather than once per stream run.
+  * Every stream runs through the one replay harness, [[Replay.run]],
+  * which owns its scratch dirs, checkpoint, trigger and cleanup and
+  * starts it through [[startStream]], so its generated code is compiled
+  * once per JVM rather than once per stream run. Every chunk-replay
+  * fixture is a memoized [[Carve]].
   */
 object Streaming {
 
@@ -47,6 +48,21 @@ object Streaming {
     spark.conf.set("spark.sql.shuffle.partitions", parts)
     try body
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** Runs `body` on the RocksDB state store — the provider the
+    * state-v2 (transformWithState) queries require — and restores the
+    * caller's provider setting afterwards (unset stays unset). */
+  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
@@ -152,7 +168,7 @@ object Streaming {
     // cache VALUE carries the file's (mtime, size) stamp: if the fixture
     // is regenerated under the same path with a different physical ts
     // encoding mid-JVM — the exact drift this probe exists for — the
-    // stale schema must not survive (the disorderCache re-validation
+    // stale schema must not survive (the [[Carve]] re-validation
     // discipline; a stale hit here IS the silent 1000× shrink). Keying
     // the map by sfDir with the stamp in the value (not the key) also
     // replaces the prior entry on regeneration instead of accreting one
@@ -295,25 +311,13 @@ object Streaming {
     * (date, hour); a daily-batch consumer gets (date) at 1/24th the
     * file count. */
   def runIngest(spark: SparkSession, sfDir: String, outDir: String,
-      partitionCols: Seq[String] = Seq("date", "hour")): String = {
-    val checkpoint = Files.createTempDirectory("graft-ckpt-").toString
-    // AvailableNow drains everything; the checkpoint is call-scoped
-    // (resume semantics are proven by the dedicated spec with a
-    // caller-owned checkpoint), so reclaim it in finally — a failed
-    // stream must not leak a corpus-scale scratch dir per run (the
-    // q270 discipline, retrofitted)
-    try {
-      val q = startStream(spark)(projectIngest(readEventsStreamConfigured(spark, sfDir))
-        .transform(graft.plans.PlanProbe.record).writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .partitionBy(partitionCols: _*)
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-      outDir
-    } finally TempIo.deleteRecursively(checkpoint)
+      partitionCols: Seq[String] = Seq("date", "hour")): String = Replay.run(spark) { r =>
+    // the checkpoint is call-scoped: resume semantics are proven by the
+    // dedicated spec with a caller-owned checkpoint
+    r.drain(projectIngest(readEventsStreamConfigured(spark, sfDir)))(
+      _.format("parquet").option("path", outDir).outputMode("append")
+        .partitionBy(partitionCols: _*))
+    outDir
   }
 
   /** S5 end-to-end as an oracle-checked query: stream-ingest events
@@ -339,15 +343,13 @@ object Streaming {
         .orderBy($"date", $"hour"))
   }
 
-  def q63IngestRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft-ingest-").toString
+  def q63IngestRoundtrip(spark: SparkSession, sfDir: String): DataFrame = Replay.run(spark) { r =>
+    val out = r.dir("graft-ingest-")
     // date-grain sink here (the hour column still flows as data); the
     // full (date, hour) layout is exercised by the runIngest spec — the
     // roundtrip proof is identical, at 1/24th the directory count.
-    try {
-      runIngest(spark, sfDir, out, partitionCols = Seq("date"))
-      readbackAgg(spark, out)
-    } finally TempIo.deleteRecursively(out)
+    runIngest(spark, sfDir, out, partitionCols = Seq("date"))
+    readbackAgg(spark, out)
   }
 
   def q63Sql: String =
@@ -367,24 +369,24 @@ object Streaming {
     * at-least-once replay. Oracle-checked by reading the "store" back
     * and proving the roundtrip preserved every row (shares q63's
     * contract). */
-  def q86ForeachSink(spark: SparkSession, sfDir: String): DataFrame = {
+  def q86ForeachSink(spark: SparkSession, sfDir: String): DataFrame = Replay.run(spark) { r =>
+    val out = r.dir("graft-fes-")
+    r.drain(projectIngest(readEventsStream(spark, sfDir)))(
+      _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/epoch=$epochId")
+      })
+    readbackAgg(spark, out)
+  }
+
+  /** The graftsink read-back of q270/q284/q413: per (date, hour) row and
+    * key counts, pinned to driver memory so the scratch store can go. */
+  private def graftsinkAgg(spark: SparkSession, store: String): DataFrame = {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-fes-").toString
-    val checkpoint = Files.createTempDirectory("graft-fes-ckpt-").toString
-    try {
-      val q = startStream(spark)(projectIngest(readEventsStream(spark, sfDir))
-        .transform(graft.plans.PlanProbe.record).writeStream
-        .foreachBatch { (batch: DataFrame, epochId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/epoch=$epochId")
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-      readbackAgg(spark, out)
-    } finally {
-      TempIo.deleteRecursively(out)
-      TempIo.deleteRecursively(checkpoint)
-    }
+    TempIo.materialize(spark,
+      spark.read.format("graftsink").load(store)
+        .groupBy($"date", $"hour")
+        .agg(count(lit(1)).as("counts"), countDistinct($"key").as("n_keys"))
+        .orderBy($"date", $"hour"))
   }
 
   /** q270 — S6 through the CONNECTOR shape: q86's foreachBatch callback
@@ -400,29 +402,14 @@ object Streaming {
     * per committed part file, no row ever transiting the driver in
     * either direction — and aggregated per (date, hour): the q63/q86
     * shared roundtrip oracle. */
-  def q270GraftSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val out = TempIo.createTempDir("graft-dsv2-")
-    val ckpt = TempIo.createTempDir("graft-dsv2-ckpt-")
-    try {
-      val q = startStream(spark)(projectIngest(readEventsStream(spark, sfDir))
-        .transform(graft.plans.PlanProbe.record).writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.format("graftsink").mode("append")
-            .option("path", out).save()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-      TempIo.materialize(spark,
-        spark.read.format("graftsink").load(out)
-          .groupBy($"date", $"hour")
-          .agg(count(lit(1)).as("counts"), countDistinct($"key").as("n_keys"))
-          .orderBy($"date", $"hour"))
-    } finally {
-      TempIo.deleteRecursively(out)
-      TempIo.deleteRecursively(ckpt)
-    }
+  def q270GraftSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = Replay.run(spark) { r =>
+    val out = r.dir("graft-dsv2-")
+    r.drain(projectIngest(readEventsStream(spark, sfDir)))(
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.format("graftsink").mode("append")
+          .option("path", out).save()
+      })
+    graftsinkAgg(spark, out)
   }
 
   /** q284 — S6 as a TRUE V2 STREAMING SINK: the ingest stream writes
@@ -435,28 +422,11 @@ object Streaming {
     * which is where the reference's MongoDB sink needs it
     * (consumer.scala:176-181). Read back through the provider and
     * aggregated per (date, hour): the q63/q86/q270 shared oracle. */
-  def q284GraftSinkStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val out = TempIo.createTempDir("graft-dsv2s-")
-    val ckpt = TempIo.createTempDir("graft-dsv2s-ckpt-")
-    try {
-      val q = startStream(spark)(projectIngest(readEventsStream(spark, sfDir))
-        .transform(graft.plans.PlanProbe.record).writeStream
-        .format("graftsink")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-      TempIo.materialize(spark,
-        spark.read.format("graftsink").load(out)
-          .groupBy($"date", $"hour")
-          .agg(count(lit(1)).as("counts"), countDistinct($"key").as("n_keys"))
-          .orderBy($"date", $"hour"))
-    } finally {
-      TempIo.deleteRecursively(out)
-      TempIo.deleteRecursively(ckpt)
-    }
+  def q284GraftSinkStream(spark: SparkSession, sfDir: String): DataFrame = Replay.run(spark) { r =>
+    val out = r.dir("graft-dsv2s-")
+    r.drain(projectIngest(readEventsStream(spark, sfDir)))(
+      _.format("graftsink").option("path", out).outputMode("append"))
+    graftsinkAgg(spark, out)
   }
 
   /** q413 — CONNECTOR→CONNECTOR ingest loop: the q63 shape run
@@ -477,37 +447,18 @@ object Streaming {
     * executor→executor through both connectors; one part file = one
     * task on the read side, staged files + one atomic rename per epoch
     * on the write side. */
-  def q413ConnectorLoop(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val src = TempIo.createTempDir("graft-cloop-src-")
-    val dst = TempIo.createTempDir("graft-cloop-dst-")
-    val ckpt = TempIo.createTempDir("graft-cloop-ckpt-")
-    try {
-      projectIngest(graft.engine.Tables.events(spark, sfDir))
-        .repartition(4)
-        .write.format("graftsink").mode("append")
-        .option("path", src).save()
-      val q = startStream(spark)(spark.readStream.format("graftsink")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-        .transform(graft.plans.PlanProbe.record)
-        .writeStream
-        .format("graftsink")
-        .option("path", dst)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-      TempIo.materialize(spark,
-        spark.read.format("graftsink").load(dst)
-          .groupBy($"date", $"hour")
-          .agg(count(lit(1)).as("counts"), countDistinct($"key").as("n_keys"))
-          .orderBy($"date", $"hour"))
-    } finally {
-      TempIo.deleteRecursively(src)
-      TempIo.deleteRecursively(dst)
-      TempIo.deleteRecursively(ckpt)
-    }
+  def q413ConnectorLoop(spark: SparkSession, sfDir: String): DataFrame = Replay.run(spark) { r =>
+    val src = r.dir("graft-cloop-src-")
+    val dst = r.dir("graft-cloop-dst-")
+    projectIngest(graft.engine.Tables.events(spark, sfDir))
+      .repartition(4)
+      .write.format("graftsink").mode("append")
+      .option("path", src).save()
+    r.drain(spark.readStream.format("graftsink")
+      .option("maxFilesPerTrigger", "1")
+      .load(src))(
+      _.format("graftsink").option("path", dst).outputMode("append"))
+    graftsinkAgg(spark, dst)
   }
 
   /** q414 — STATEFUL AGGREGATION OVER THE CUSTOM STREAMING SOURCE: a
@@ -529,9 +480,8 @@ object Streaming {
     * memory drain holds only the grid-bounded complete frame. */
   def q414ConnectorStatefulAgg(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = TempIo.createTempDir("graft-csagg-src-")
-    val ckpt = TempIo.createTempDir("graft-csagg-ckpt-")
-    try {
+    Replay.run(spark) { r =>
+      val src = r.dir("graft-csagg-src-")
       graft.engine.Tables.events(spark, sfDir)
         .select($"event_id", $"ts", $"event_type",
           graft.engine.Exact.cents($"value").as("cents"))
@@ -542,23 +492,15 @@ object Streaming {
         .load(src)
         .groupBy(window($"ts", "1 day"), $"event_type")
         .agg(count(lit(1)).as("n"), sum($"cents").as("cents"))
-      val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-        .outputMode("complete")
-        // BOUNDED memory drain: |days|×|types| complete-mode windows —
-        // time-grid bounded at any corpus size
-        .format("memory")
-        .queryName("connector_stateful_agg")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-      graft.engine.TempIo.materialize(spark,
+      // BOUNDED memory drain: |days|×|types| complete-mode windows —
+      // time-grid bounded at any corpus size
+      r.drain(agg)(_.outputMode("complete").format("memory")
+        .queryName("connector_stateful_agg"))
+      TempIo.materialize(spark,
         spark.table("connector_stateful_agg")
           .select(graft.engine.Exact.tsString($"window.start").as("day"),
             $"event_type", $"n", $"cents")
           .orderBy($"day", $"event_type"))
-    } finally {
-      TempIo.deleteRecursively(src)
-      TempIo.deleteRecursively(ckpt)
     }
   }
 
@@ -601,10 +543,9 @@ object Streaming {
     * read-back aggregate. */
   def q415ConnectorAppendWindow(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = TempIo.createTempDir("graft-capp-src-")
-    val dst = TempIo.createTempDir("graft-capp-dst-")
-    val ckpt = TempIo.createTempDir("graft-capp-ckpt-")
-    try {
+    Replay.run(spark) { r =>
+      val src = r.dir("graft-capp-src-")
+      val dst = r.dir("graft-capp-dst-")
       graft.engine.Tables.events(spark, sfDir)
         .select($"event_id", $"ts", $"event_type",
           graft.engine.Exact.cents($"value").as("cents"))
@@ -618,20 +559,10 @@ object Streaming {
         .agg(count(lit(1)).as("n"), sum($"cents").as("cents"))
         .select(graft.engine.Exact.tsString($"window.start").as("day"),
           $"event_type", $"n", $"cents")
-      val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-        .outputMode("append")
-        .format("graftsink")
-        .option("path", dst)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
+      r.drain(agg)(_.outputMode("append").format("graftsink").option("path", dst))
       TempIo.materialize(spark,
         spark.read.format("graftsink").load(dst)
           .orderBy($"day", $"event_type"))
-    } finally {
-      TempIo.deleteRecursively(src)
-      TempIo.deleteRecursively(dst)
-      TempIo.deleteRecursively(ckpt)
     }
   }
 
@@ -658,48 +589,28 @@ object Streaming {
     * publish side against replayed batches. The read-back aggregate
     * equals the batch aggregate over ALL events iff every chunk was
     * delivered exactly once across the restart — which is the oracle. */
-  def q290GraftSinkRestart(spark: SparkSession, sfDir: String): DataFrame = {
+  def q290GraftSinkRestart(spark: SparkSession, sfDir: String): DataFrame = Replay.run(spark) { r =>
     import spark.implicits._
-    val src = TempIo.createTempDir("graft-gsr-src-")
-    val out = TempIo.createTempDir("graft-gsr-out-")
-    val ckpt = TempIo.createTempDir("graft-gsr-ckpt-")
-    try {
-      def drain(): Unit = {
-        val q = startStream(spark)(spark.readStream
-          .schema(quarterChunkSchema)
-          .option("pathGlobFilter", "chunk*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src)
-          .select($"event_id", $"user_id",
-            date_format($"ts", "yyyy-MM-dd").as("date"),
-            date_format($"ts", "HH").as("hour"))
-          .transform(graft.plans.PlanProbe.record).writeStream
-          .format("graftsink")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()))
-        q.awaitTermination()
-      }
-      // staged arrival by FILE COPY from the memoized quarter carve
-      // (r15, the q205 discipline): byte-identical chunks + pinned
-      // mtimes, so the restart contract under test is unchanged while
-      // the four per-call chunk derivations (scan + coalesce(1) write
-      // each) disappear
-      val carve = timeQuarterChunks(spark, sfDir)
-      stageChunksByCopy(carve, src, Seq(1, 2))
-      drain()
-      stageChunksByCopy(carve, src, Seq(3, 4))
-      drain()
-      TempIo.materialize(spark,
-        spark.read.format("graftsink").load(out)
-          .groupBy($"date", $"hour")
-          .agg(count(lit(1)).as("counts"),
-            countDistinct($"event_id").as("n_keys"))
-          .orderBy($"date", $"hour"))
-    } finally {
-      Seq(src, out, ckpt).foreach(TempIo.deleteRecursively)
-    }
+    val src = r.dir("graft-gsr-src-")
+    val out = r.dir("graft-gsr-out-")
+    val ckpt = r.dir("graft-gsr-ckpt-")
+    def drain(): Unit =
+      r.drain(Carve.stream(spark, src, quarterChunkSchema)
+        .select($"event_id", $"user_id",
+          date_format($"ts", "yyyy-MM-dd").as("date"),
+          date_format($"ts", "HH").as("hour")), ckpt)(
+        _.format("graftsink").option("path", out).outputMode("append"))
+    val carve = timeQuarterChunks(spark, sfDir)
+    Carve.stage(carve, src, Seq(1, 2))
+    drain()
+    Carve.stage(carve, src, Seq(3, 4))
+    drain()
+    TempIo.materialize(spark,
+      spark.read.format("graftsink").load(out)
+        .groupBy($"date", $"hour")
+        .agg(count(lit(1)).as("counts"),
+          countDistinct($"event_id").as("n_keys"))
+        .orderBy($"date", $"hour"))
   }
 
   /** Exactly-once across the restart ⇔ the plain batch aggregate. */
@@ -722,27 +633,15 @@ object Streaming {
     * CollectMetrics node aggregates alongside the sink write). */
   def q291StreamObserve(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
     val src = timeQuarterChunks(spark, sfDir)
-    val sink = TempIo.createTempDir("graft-obs-sink-")
-    val ckpt = TempIo.createTempDir("graft-obs-ckpt-")
-    try {
-      val q = startStream(spark)(spark.readStream
-        .schema(quarterChunkSchema)
-        .option("pathGlobFilter", "chunk*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    Replay.run(spark) { r =>
+      val sink = r.dir("graft-obs-sink-")
+      val q = r.drain(Carve.stream(spark, src, quarterChunkSchema)
         .observe("ingest_audit",
           count(lit(1)).as("n_rows"),
           count(when($"value" > 100, 1)).as("high_value"),
-          sum(graft.engine.Exact.cents($"value")).as("cents"))
-        .transform(graft.plans.PlanProbe.record).writeStream
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
+          sum(graft.engine.Exact.cents($"value")).as("cents")))(
+        _.format("parquet").option("path", sink).outputMode("append"))
       val perBatch = q.recentProgress.toSeq
         .flatMap(p => Option(p.observedMetrics.get("ingest_audit")))
       val totals = perBatch.foldLeft((0L, 0L, 0L)) { (acc, r) =>
@@ -754,8 +653,6 @@ object Streaming {
       val nDataBatches = perBatch.count(_.getAs[Long]("n_rows") > 0)
       Seq((nDataBatches.toLong, totals._1, totals._2, totals._3 / 100.0))
         .toDF("n_batches", "n_rows", "high_value", "sum_value")
-    } finally {
-      Seq(sink, ckpt).foreach(TempIo.deleteRecursively)
     }
   }
 
@@ -787,68 +684,45 @@ object Streaming {
     * batch; quarantine volume is the error rate, not the corpus — the
     * dead-letter sink stays small while the clean path carries the
     * firehose. */
-  /** q228's corrupted single-chunk fixture (every 13th event's props
-    * prefixed "corrupt:"), MEMOIZED per sfDir (r15): the carve and the
-    * classifier-precondition scan are deterministic per fixture, so
-    * they run once per session instead of once per call per bench
-    * pass. The precondition `require` rides the build — it guards
-    * FIXTURE drift, which the stamp key already re-detects. */
-  private val dlqCache = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  /** q228's corrupted single-chunk carve: every 13th event's props
+    * prefixed "corrupt:". The classifier-precondition `require` rides
+    * the build — it guards FIXTURE drift, which the carve's stamp check
+    * already re-detects. */
   private[graft] def corruptedChunk(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val stamp = fixtureStamp(spark, s"$sfDir/events.parquet")
-      val cached = dlqCache.get(sfDir).collect {
-        case (`stamp`, d) if new java.io.File(s"$d/chunk1.parquet").exists() => d
-      }
-      cached.getOrElse {
-        import spark.implicits._
-        val src = graft.engine.TempIo.createTempDir("graft-dlq-src-")
-        val stage = s"$src/stage"
-        graft.engine.Tables.events(spark, sfDir)
-          .withColumn("props",
-            when($"event_id" % 13 === 0, concat(lit("corrupt:"), $"props"))
-              .otherwise($"props"))
-          .coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$src/chunk1.parquet"))
-        graft.engine.TempIo.deleteRecursively(stage)
-        val propsSchema = StructType(Seq(StructField("k", LongType)))
-        // Classifier precondition, asserted not assumed: the split (and
-        // its oracle) equate "parses with non-null k" with "not
-        // corrupted". A fixture row shipping null/absent-k props would
-        // be quarantined by from_json nullness while the oracle still
-        // counts it clean — fail loudly as fixture drift instead of as
-        // a hash mismatch.
-        val nUnparseable = graft.engine.Tables.events(spark, sfDir)
-          .filter(from_json($"props", propsSchema).getField("k").isNull)
-          .count()
-        require(nUnparseable == 0,
-          s"q228 fixture assumption broken: $nUnparseable events rows lack " +
-            "non-null parseable props.k — classifier and oracle would " +
-            "disagree (fixture drift, not an engine bug)")
-        graft.engine.MemoTrace.built(s"corruptedChunk($sfDir)")
-        graft.engine.TempIo.deleteAtExit(src)
-        dlqCache(sfDir) = (stamp, src)
-        src
-      }
+    Carve(spark, sfDir, "corruptedChunk", "events") {
+      import spark.implicits._
+      val events = Tables.events(spark, sfDir)
+      val propsSchema = StructType(Seq(StructField("k", LongType)))
+      // Classifier precondition, asserted not assumed: the split (and
+      // its oracle) equate "parses with non-null k" with "not
+      // corrupted". A fixture row shipping null/absent-k props would
+      // be quarantined by from_json nullness while the oracle still
+      // counts it clean — fail loudly as fixture drift instead of as
+      // a hash mismatch.
+      val nUnparseable = events
+        .filter(from_json($"props", propsSchema).getField("k").isNull)
+        .count()
+      require(nUnparseable == 0,
+        s"q228 fixture assumption broken: $nUnparseable events rows lack " +
+          "non-null parseable props.k — classifier and oracle would " +
+          "disagree (fixture drift, not an engine bug)")
+      Seq(events.withColumn("props",
+        when($"event_id" % 13 === 0, concat(lit("corrupt:"), $"props"))
+          .otherwise($"props")))
     }
 
   def q228StreamDeadLetter(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
     val src = corruptedChunk(spark, sfDir)
-    val cleanOut = graft.engine.TempIo.createTempDir("graft-dlq-clean-")
-    val deadOut = graft.engine.TempIo.createTempDir("graft-dlq-dead-")
-    val ckpt = graft.engine.TempIo.createTempDir("graft-dlq-ckpt-")
-    try {
+    Replay.run(spark) { r =>
+      val cleanOut = r.dir("graft-dlq-clean-")
+      val deadOut = r.dir("graft-dlq-dead-")
       val propsSchema = StructType(Seq(StructField("k", LongType)))
-      val q = startStream(spark)(spark.readStream
+      r.drain(spark.readStream
         .schema(eventsNormSchema)
         .option("pathGlobFilter", "chunk*.parquet")
-        .parquet(src)
-        .transform(graft.plans.PlanProbe.record).writeStream
-        .foreachBatch { (batch: DataFrame, epochId: Long) =>
+        .parquet(src))(
+        _.foreachBatch { (batch: DataFrame, epochId: Long) =>
           val parsed = batch.withColumn("k",
             from_json(col("props"), propsSchema).getField("k"))
           parsed.filter(col("k").isNull)
@@ -857,20 +731,16 @@ object Streaming {
           parsed.filter(col("k").isNotNull)
             .select(col("event_id"), col("k"))
             .write.mode("overwrite").parquet(s"$cleanOut/epoch=$epochId")
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
+        })
       val clean = spark.read.parquet(cleanOut)
       val dead = spark.read.parquet(deadOut)
-      graft.engine.TempIo.materialize(spark,
+      TempIo.materialize(spark,
         clean.agg(count(lit(1)).as("n_clean"), sum($"k").as("clean_k_sum"))
           .crossJoin(dead.agg(count(lit(1)).as("n_dead"),
             sum($"event_id").as("dead_id_sum"),
             count(when($"props".startsWith("corrupt:"), 1))
               .as("n_replayable"))))
-    } finally Seq(cleanOut, deadOut, ckpt) // src is the memo's, not ours
-      .foreach(graft.engine.TempIo.deleteRecursively)
+    }
   }
 
   /** Oracle: the corrupted set is exactly event_id % 13 = 0; clean rows
@@ -906,13 +776,9 @@ object Streaming {
       .groupBy($"event_type")
       .agg(count(lit(1)).as("counts"),
         first($"hv_share").as("hv_share"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(enriched).writeStream
-      .outputMode("complete")
-      // BOUNDED memory drain: one row per event_type (complete mode) — O(|types|), data-volume-free
-      .format("memory")
-      .queryName("stream_static")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
+    // BOUNDED memory drain: one row per event_type (complete mode) — O(|types|), data-volume-free
+    Replay.run(spark)(_.drain(enriched)(
+      _.outputMode("complete").format("memory").queryName("stream_static")))
     spark.table("stream_static")
       .select($"event_type", $"counts", $"hv_share")
       .orderBy($"event_type")
@@ -937,13 +803,9 @@ object Streaming {
       .groupBy(window($"ts", "1 hour"), $"event_type")
       .agg(count(lit(1)).as("counts"),
         graft.engine.Exact.sumExact($"value", 2).as("sum_value"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("complete")
-      // BOUNDED memory drain: |hour grid| x |event types| rows (complete mode) — grows with the time horizon, not row count
-      .format("memory")
-      .queryName("stream_window")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
+    // BOUNDED memory drain: |hour grid| x |event types| rows (complete mode) — grows with the time horizon, not row count
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("complete").format("memory").queryName("stream_window")))
     spark.table("stream_window")
       .select(graft.engine.Exact.tsString($"window.start").as("ws"),
         $"event_type", $"counts", $"sum_value")
@@ -1133,14 +995,10 @@ object Streaming {
       .groupBy(window($"ts", "1 hour"), $"event_type")
       .agg(count(lit(1)).as("counts"),
         graft.engine.Exact.sumExact($"value", 2).as("sum_value"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("append")
-      // BOUNDED memory drain: |hour grid| x |event types| rows — time-grid-bounded, not row-scale
-      .format("memory")
-      .queryName("append_window")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    graft.engine.TempIo.materialize(spark,
+    // BOUNDED memory drain: |hour grid| x |event types| rows — time-grid-bounded, not row-scale
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("append").format("memory").queryName("append_window")))
+    TempIo.materialize(spark,
       spark.table("append_window")
         .select(graft.engine.Exact.tsString($"window.start").as("ws"),
           $"event_type", $"counts", $"sum_value")
@@ -1181,31 +1039,19 @@ object Streaming {
     * files). */
   def q128UpdateMode(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    // memoized pmod carve (r15): identical chunk files every call, so
-    // the per-call four-scan/four-write fixture build is shared
-    val src = pmodChunks(spark, sfDir)
-    val agg = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
+    val agg = Carve.stream(spark, pmodChunks(spark, sfDir), eventsNormSchema)
       .groupBy(window($"ts", "1 hour"), $"event_type")
       .agg(count(lit(1)).as("counts"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("update")
-      // BOUNDED memory drain: |hour grid| x |event types| update rows — time-grid-bounded
-      .format("memory")
-      .queryName("update_window")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    val result = graft.engine.TempIo.materialize(spark,
+    // BOUNDED memory drain: |hour grid| x |event types| update rows — time-grid-bounded
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("update").format("memory").queryName("update_window")))
+    TempIo.materialize(spark,
       spark.table("update_window")
         .groupBy($"window", $"event_type")
         .agg(count(lit(1)).as("n_emissions"), max($"counts").as("final_counts"))
         .select(graft.engine.Exact.tsString($"window.start").as("ws"),
           $"event_type", $"n_emissions", $"final_counts")
         .orderBy($"ws", $"event_type"))
-    result
   }
 
   def q128Sql: String =
@@ -1235,21 +1081,13 @@ object Streaming {
     * The oracle recomputes from scratch (q136's contract): equality of
     * a 4-step maintained state with the one-shot aggregate IS the
     * maintenance-correctness claim. */
-  def q144StreamIvm(spark: SparkSession, sfDir: String): DataFrame = {
+  def q144StreamIvm(spark: SparkSession, sfDir: String): DataFrame = Replay.run(spark) { r =>
     import spark.implicits._
-    // memoized pmod carve (r15, shared with q128): identical chunk
-    // files every call, the per-call fixture build jobs disappear
     val src = pmodChunks(spark, sfDir)
-    val stateRoot = TempIo.createTempDir("graft-sivm-state-")
-    val checkpoint = TempIo.createTempDir("graft-sivm-ckpt-")
+    val stateRoot = r.dir("graft-sivm-state-")
     var stateVersion = -1L
-    val q = startStream(spark)(spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .transform(graft.plans.PlanProbe.record).writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
+    r.drain(Carve.stream(spark, src, eventsNormSchema))(
+      _.foreachBatch { (batch: DataFrame, epochId: Long) =>
         val partial = batch.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(18,2)")).cast("decimal(38,2)").as("s"))
@@ -1262,19 +1100,13 @@ object Streaming {
               sum(col("s")).cast("decimal(38,2)").as("s"))
         merged.coalesce(1).write.mode("overwrite").parquet(s"$stateRoot/v$epochId")
         stateVersion = epochId
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    val result = TempIo.materialize(spark,
+      })
+    TempIo.materialize(spark,
       spark.read.parquet(s"$stateRoot/v$stateVersion")
         .select($"event_type", $"n".as("n_total"),
           graft.engine.Exact.decToDouble($"s", 2).as("sum_value"),
           lit(stateVersion + 1).as("n_refreshes"))
         .orderBy($"event_type"))
-    TempIo.deleteRecursively(stateRoot)
-    TempIo.deleteRecursively(checkpoint)
-    result
   }
 
   /** The maintained state must equal a from-scratch aggregate, and the
@@ -1311,108 +1143,36 @@ object Streaming {
     * assignment is displaced by the q168 quadratic jitter scaled to
     * ±n/2 — a deterministically DISORDERED replay fixture (strays
     * arrive ≥2 batches after their quarter, past state eviction).
-    * Shared by q174 (windowed agg) and the q194/q195/q199 join family —
-    * and MEMOIZED per sfDir: the carve is deterministic, so five
-    * queries (× two bench passes) re-reading events and re-writing the
-    * same four files is pure waste; the first caller builds, the rest
-    * reuse. Callers must NOT delete the returned dir (the cache owns
-    * it; it is re-validated and rebuilt if an outside force removes
-    * it). Readers are unaffected by sharing: each query opens its own
-    * stream + checkpoint over the dir. */
-  private val disorderCache = scala.collection.concurrent.TrieMap.empty[String, String]
+    * Shared by q174 (windowed agg), the q194/q195/q199 join family,
+    * the q205 restart and the exactly-mergeable sketches. */
   private[graft] def disorderedChunks(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val cached = disorderCache.get(sfDir).filter(d =>
-        (1 to 4).forall(i => new java.io.File(s"$d/chunk$i.parquet").exists()))
-      cached.getOrElse {
-        val src = graft.engine.TempIo.createTempDir("graft-wmr-src-")
-        writeDisorderedChunks(spark, sfDir, src, 1 to 4)
-        graft.engine.MemoTrace.built(s"disorderedChunks($sfDir)")
-        // the cache owns the dir for the JVM's lifetime; reclaim at exit
-        // so repeated runs don't accrete an events copy per sfDir
-        graft.engine.TempIo.deleteAtExit(src)
-        disorderCache(sfDir) = src
-        src
-      }
+    Carve(spark, sfDir, "disorderedChunks", "events") {
+      import spark.implicits._
+      val raw = Tables.events(spark, sfDir)
+      val n = raw.agg(max($"event_id")).head().getLong(0)
+      // displacement up to ±n/2: a late stray can arrive ≥2 batches after
+      // its time-quarter, i.e. AFTER its window was finalized — real drops
+      val chunked = raw.withColumn("c",
+        least(lit(4), greatest(lit(1), expr(
+          s"(event_id - 1 + ((event_id * event_id) % 97 - 48) * ($n div 96))" +
+            s" * 4 div $n + 1"))))
+      (1 to 4).map(i => chunked.filter($"c" === i).drop("c"))
     }
-
-  /** Stage selected chunk files of an already-built carve into `dst`
-    * by FILE COPY (r15): the staged-restart queries (q205, q290) used
-    * to re-derive their chunk subsets through Spark jobs — a source
-    * scan plus a coalesce(1) write per chunk per stage — when the
-    * memoized carve already holds the identical bytes. Copying is
-    * byte-identical by construction and re-pins the strictly
-    * increasing per-index mtimes, so FileStreamSource replays the
-    * staged dir exactly as it replays the carve itself. */
-  private def stageChunksByCopy(carveDir: String, dst: String,
-      chunks: Seq[Int]): Unit =
-    chunks.foreach { i =>
-      val from = java.nio.file.Paths.get(s"$carveDir/chunk$i.parquet")
-      val dest = java.nio.file.Paths.get(s"$dst/chunk$i.parquet")
-      java.nio.file.Files.copy(from, dest,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-
-  /** Write the selected chunk files of the disordered carve into `dst`
-    * — split out so q205 can stage chunks 1–2, restart, then 3–4. */
-  private def writeDisorderedChunks(spark: SparkSession, sfDir: String,
-      dst: String, chunks: Seq[Int]): Unit = {
-    import spark.implicits._
-    val nChunks = 4
-    val raw = graft.engine.Tables.events(spark, sfDir)
-    val n = raw.agg(max($"event_id")).head().getLong(0)
-    // displacement up to ±n/2: a late stray can arrive ≥2 batches after
-    // its time-quarter, i.e. AFTER its window was finalized — real drops
-    val chunked = raw.withColumn("c",
-      least(lit(nChunks), greatest(lit(1), expr(
-        s"(event_id - 1 + ((event_id * event_id) % 97 - 48) * ($n div 96))" +
-          s" * $nChunks div $n + 1"))))
-    chunks.foreach { i =>
-      val dir = s"$dst/stage$i"
-      chunked.filter($"c" === i).drop("c").coalesce(1).write.parquet(dir)
-      val part = new java.io.File(dir).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dest = java.nio.file.Paths.get(s"$dst/chunk$i.parquet")
-      java.nio.file.Files.move(part.toPath, dest)
-      // every disordered-carve oracle models batch k = chunk k, and
-      // FileStreamSource orders same-batch discoveries by modification
-      // time — pin each chunk's mtime strictly increasing (exactly as
-      // writeTimeQuarterChunks does) so a coarse-granularity filesystem
-      // can never tie two chunks and reorder the replay. Pinned by
-      // chunk INDEX, so q205's staged writes (1-2, restart, 3-4) keep
-      // the same global order.
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      graft.engine.TempIo.deleteRecursively(dir)
-    }
-  }
 
   def q174WatermarkReplay(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = disorderedChunks(spark, sfDir)
-    val agg = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
+    val agg = Carve.stream(spark, disorderedChunks(spark, sfDir), eventsNormSchema)
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "1 hour"), $"event_type")
       .agg(count(lit(1)).as("counts"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("append")
-      // BOUNDED memory drain: |hour grid| x |event types| rows per flush — time-grid-bounded
-      .format("memory")
-      .queryName("wm_replay")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    val result = graft.engine.TempIo.materialize(spark,
+    // BOUNDED memory drain: |hour grid| x |event types| rows per flush — time-grid-bounded
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("append").format("memory").queryName("wm_replay")))
+    TempIo.materialize(spark,
       spark.table("wm_replay")
         .select(graft.engine.Exact.tsString($"window.start").as("ws"),
           $"event_type", $"counts")
         .orderBy($"ws", $"event_type"))
-    result
   }
 
   /** Relational model of the replay: chunk assignment → per-prefix
@@ -1459,25 +1219,16 @@ object Streaming {
     * output lands distributed in the sink and is re-read distributed,
     * so no row-scale streaming result ever transits the driver (the
     * `format("memory")` + materialize path this replaces pins the full
-    * output in driver memory — fine at sf0.1, fatal at 100×). The
-    * checkpoint is call-scoped and reclaimed eagerly; the sink backs
-    * the returned plan and is reclaimed by [[TempIo.deleteAtExit]].
-    * The explicit read schema covers the zero-output edge (an empty
-    * sink has no footer to infer from). */
-  private[graft] def drainToFileSink(spark: SparkSession, df: DataFrame): DataFrame = {
-    val sink = TempIo.createTempDir("graft-ssink-")
-    val ckpt = TempIo.createTempDir("graft-ssink-ckpt-")
-    val q = startStream(spark)(graft.plans.PlanProbe.record(df).writeStream
-      .format("parquet")
-      .option("path", sink)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    TempIo.deleteRecursively(ckpt)
-    TempIo.deleteAtExit(sink)
-    spark.read.schema(df.schema).parquet(sink)
-  }
+    * output in driver memory — fine at sf0.1, fatal at 100×). The sink
+    * backs the returned plan, so it is a [[Replay.resultDir]]. The
+    * explicit read schema covers the zero-output edge (an empty sink
+    * has no footer to infer from). */
+  private[graft] def drainToFileSink(spark: SparkSession, df: DataFrame): DataFrame =
+    Replay.run(spark) { r =>
+      val sink = r.resultDir("graft-ssink-")
+      r.drain(df)(_.format("parquet").option("path", sink).outputMode("append"))
+      spark.read.schema(df.schema).parquet(sink)
+    }
 
   /** [[drainToFileSink]]'s UPDATE-mode sibling: file sinks accept only
     * append mode, so update-mode state emissions (the
@@ -1488,22 +1239,15 @@ object Streaming {
     * reassembles the same multiset the memory sink would have held,
     * without any row transiting the driver. Epoch keying keeps a
     * replayed batch idempotent (q86's contract). */
-  private[graft] def drainUpdatesToFiles(spark: SparkSession, df: DataFrame): DataFrame = {
-    val sink = TempIo.createTempDir("graft-usink-")
-    val ckpt = TempIo.createTempDir("graft-usink-ckpt-")
-    val cols = df.schema.fieldNames.map(col).toSeq
-    val q = startStream(spark)(graft.plans.PlanProbe.record(df).writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sink/epoch=$epochId")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    TempIo.deleteRecursively(ckpt)
-    TempIo.deleteAtExit(sink)
-    spark.read.parquet(sink).select(cols: _*)
-  }
+  private[graft] def drainUpdatesToFiles(spark: SparkSession, df: DataFrame): DataFrame =
+    Replay.run(spark) { r =>
+      val sink = r.resultDir("graft-usink-")
+      r.drain(df)(_.outputMode("update")
+        .foreachBatch { (batch: DataFrame, epochId: Long) =>
+          batch.write.mode("overwrite").parquet(s"$sink/epoch=$epochId")
+        })
+      spark.read.parquet(sink).select(df.schema.fieldNames.map(col).toSeq: _*)
+    }
 
   /** q194 — stream-stream join under disorder: q42's interval join
     * (purchase ⋈ error within 12 h, per user) replayed over the q174
@@ -1517,18 +1261,22 @@ object Streaming {
     * fallen below the active watermark — late INPUT rows are also
     * dropped against the same lagged watermark. Streaming join
     * semantics derived and checked, not assumed. */
-  def q194StreamJoinDisorder(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
+  /** One watermarked, tag-prefixed side of the q194/q195/q199 joins over
+    * the disordered replay — shared, as [[intervalJoinSide]] is for the
+    * ordered family. */
+  private def disorderJoinSide(spark: SparkSession, sfDir: String,
+      tag: String, eventType: String): DataFrame = {
     import spark.implicits._
-    val src = disorderedChunks(spark, sfDir)
-    def side(tag: String, et: String) = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .filter($"event_type" === et)
+    Carve.stream(spark, disorderedChunks(spark, sfDir), eventsNormSchema)
+      .filter($"event_type" === eventType)
       .select($"user_id".as(s"${tag}_user"), $"ts".as(s"${tag}_ts"),
         $"event_id".as(s"${tag}_id"))
       .withWatermark(s"${tag}_ts", "1 hour")
+  }
+
+  def q194StreamJoinDisorder(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
+    import spark.implicits._
+    def side(tag: String, et: String) = disorderJoinSide(spark, sfDir, tag, et)
     val joined = side("p", "purchase").join(side("e", "error"),
       expr("p_user = e_user AND e_ts >= p_ts" +
         " AND e_ts <= p_ts + interval 12 hours"))
@@ -1555,16 +1303,7 @@ object Streaming {
     * in the batch join" model would miss. */
   def q195StreamOuterJoinDisorder(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = disorderedChunks(spark, sfDir)
-    def side(tag: String, et: String) = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .filter($"event_type" === et)
-      .select($"user_id".as(s"${tag}_user"), $"ts".as(s"${tag}_ts"),
-        $"event_id".as(s"${tag}_id"))
-      .withWatermark(s"${tag}_ts", "1 hour")
+    def side(tag: String, et: String) = disorderJoinSide(spark, sfDir, tag, et)
     val joined = side("p", "purchase").join(side("e", "error"),
       expr("p_user = e_user AND e_ts >= p_ts" +
         " AND e_ts <= p_ts + interval 12 hours"),
@@ -1653,16 +1392,7 @@ object Streaming {
     * symmetric gate fails the hash at both SFs. */
   def q199StreamFullOuterDisorder(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = disorderedChunks(spark, sfDir)
-    def side(tag: String, et: String) = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .filter($"event_type" === et)
-      .select($"user_id".as(s"${tag}_user"), $"ts".as(s"${tag}_ts"),
-        $"event_id".as(s"${tag}_id"))
-      .withWatermark(s"${tag}_ts", "1 hour")
+    def side(tag: String, et: String) = disorderJoinSide(spark, sfDir, tag, et)
     val joined = side("p", "purchase").join(side("e", "error"),
       expr("p_user = e_user AND e_ts >= p_ts" +
         " AND e_ts <= p_ts + interval 12 hours"),
@@ -1760,45 +1490,28 @@ object Streaming {
     * naive-shift variants both fail the diff. */
   def q205RestartReplay(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = TempIo.createTempDir("graft-rst-src-")
-    val sink = TempIo.createTempDir("graft-rst-sink-")
-    val ckpt = TempIo.createTempDir("graft-rst-ckpt-")
-    def drain(): Unit = {
-      val agg = spark.readStream
-        .schema(eventsNormSchema)
-        .option("pathGlobFilter", "chunk*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-          .withWatermark("ts", "1 hour")
-        .groupBy(window($"ts", "1 hour"), $"event_type")
-        .agg(count(lit(1)).as("counts"))
-        .select($"window.start".as("ws_ts"), $"event_type", $"counts")
-      val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-    }
-    // staged arrival by FILE COPY from the memoized carve (r15): the
-    // two stages used to pay four chunk derivations (source scan +
-    // coalesce(1) write each) per call; the copied bytes and pinned
-    // mtimes are identical, so the replay — and the restart semantics
-    // under test — are unchanged
     val carve = disorderedChunks(spark, sfDir)
-    stageChunksByCopy(carve, src, Seq(1, 2))
-    drain()
-    stageChunksByCopy(carve, src, Seq(3, 4))
-    drain()
-    // Lazy read-back (no driver materialization): the checkpoint can go
-    // now, but src/sink back the returned plan — exit-hook reclaimed.
-    TempIo.deleteRecursively(ckpt)
-    Seq(src, sink).foreach(TempIo.deleteAtExit)
-    spark.read.parquet(sink)
-      .select(graft.engine.Exact.tsString($"ws_ts").as("ws"),
-        $"event_type", $"counts")
-      .orderBy($"ws", $"event_type")
+    Replay.run(spark) { r =>
+      val src = r.dir("graft-rst-src-")
+      val ckpt = r.dir("graft-rst-ckpt-")
+      // lazy read-back (no driver materialization): the sink backs the plan
+      val sink = r.resultDir("graft-rst-sink-")
+      def drain(): Unit =
+        r.drain(Carve.stream(spark, src, eventsNormSchema)
+          .withWatermark("ts", "1 hour")
+          .groupBy(window($"ts", "1 hour"), $"event_type")
+          .agg(count(lit(1)).as("counts"))
+          .select($"window.start".as("ws_ts"), $"event_type", $"counts"), ckpt)(
+          _.format("parquet").option("path", sink).outputMode("append"))
+      Carve.stage(carve, src, Seq(1, 2))
+      drain()
+      Carve.stage(carve, src, Seq(3, 4))
+      drain()
+      spark.read.parquet(sink)
+        .select(graft.engine.Exact.tsString($"ws_ts").as("ws"),
+          $"event_type", $"counts")
+        .orderBy($"ws", $"event_type")
+    }
   }
 
   /** q174's model with the restart's watermark advance, CALIBRATED
@@ -1863,14 +1576,10 @@ object Streaming {
     val agg = joined
       .groupBy(window($"e_ts", "1 hour"))
       .agg(count(lit(1)).as("pairs"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("append")
-      // BOUNDED memory drain: |hour grid| windowed aggregate rows — time-grid-bounded
-      .format("memory")
-      .queryName("join_then_window")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    graft.engine.TempIo.materialize(spark,
+    // BOUNDED memory drain: |hour grid| windowed aggregate rows — time-grid-bounded
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("append").format("memory").queryName("join_then_window")))
+    TempIo.materialize(spark,
       spark.table("join_then_window")
         .select(graft.engine.Exact.tsString($"window.start").as("ws"), $"pairs")
         .orderBy($"ws"))
@@ -1940,14 +1649,10 @@ object Streaming {
     val daily = hourly
       .groupBy(window(window_time($"window"), "1 day"), $"event_type")
       .agg(sum($"hourly_n").as("counts"), count(lit(1)).as("n_hours"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(daily).writeStream
-      .outputMode("append")
-      // BOUNDED memory drain: |day grid| rollup rows — time-grid-bounded
-      .format("memory")
-      .queryName("window_rollup")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    graft.engine.TempIo.materialize(spark,
+    // BOUNDED memory drain: |day grid| rollup rows — time-grid-bounded
+    Replay.run(spark)(_.drain(daily)(
+      _.outputMode("append").format("memory").queryName("window_rollup")))
+    TempIo.materialize(spark,
       spark.table("window_rollup")
         .select(graft.engine.Exact.tsString($"window.start").as("ds"),
           $"event_type", $"counts", $"n_hours")
@@ -1985,26 +1690,22 @@ object Streaming {
     * scan, independent of corpus size. */
   def q226StateIntrospect(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val ckpt = graft.engine.TempIo.createTempDir("graft-q226-ckpt-")
-    try {
+    Replay.run(spark) { r =>
       val agg = readEventsStream(spark, sfDir)
         .withWatermark("ts", "1 hour")
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("counts"))
-      val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-        .outputMode("append")
-        .format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
+      // the read-back reads this checkpoint's state files
+      val ckpt = r.dir("graft-q226-ckpt-")
+      r.drain(agg, ckpt)(_.outputMode("append").format("noop"))
       // agg-buffer field for count(...) is named `count` in state v2
-      graft.engine.TempIo.materialize(spark,
+      TempIo.materialize(spark,
         spark.read.format("statestore").option("path", ckpt).load()
           .select(graft.engine.Exact.tsString($"key.window.start").as("ws"),
             $"key.event_type".as("event_type"),
             $"value.count".as("counts"))
           .orderBy($"ws", $"event_type"))
-    } finally graft.engine.TempIo.deleteRecursively(ckpt)
+    }
   }
 
   /** Oracle = q107's emission gate negated: in state ⇔ not emitted. */
@@ -2035,25 +1736,17 @@ object Streaming {
     * longs of state instead of |users| dedup keys. */
   def q227StreamSketch(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = disorderedChunks(spark, sfDir)
-    val agg = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
-      .parquet(src)
+    val agg = Carve.stream(spark, disorderedChunks(spark, sfDir), eventsNormSchema,
+        ReplayFilesPerTrigger)
       .select($"event_type",
         conv(substring(md5($"user_id".cast("string")), 1, 8), 16, 10)
           .cast("long").as("hv"))
       .groupBy($"event_type")
       .agg(graft.functions.KmvAggregate.kmvDistinct($"hv", 32).as("kmv_est"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("complete")
-      // BOUNDED memory drain: K KMV register rows per event_type — sketch-bounded
-      .format("memory")
-      .queryName("stream_sketch")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    graft.engine.TempIo.materialize(spark,
+    // BOUNDED memory drain: K KMV register rows per event_type — sketch-bounded
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("complete").format("memory").queryName("stream_sketch")))
+    TempIo.materialize(spark,
       spark.table("stream_sketch")
         .select($"event_type", $"kmv_est")
         .orderBy($"event_type"))
@@ -2077,23 +1770,15 @@ object Streaming {
     * twin of the q38 shuffle argument. */
   def q233StreamTopK(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = disorderedChunks(spark, sfDir)
-    val agg = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
-      .parquet(src)
+    val agg = Carve.stream(spark, disorderedChunks(spark, sfDir), eventsNormSchema,
+        ReplayFilesPerTrigger)
       .groupBy($"event_type")
       .agg(graft.functions.TopKAggregator.top_k(5)($"value", $"event_id")
         .as("top"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("complete")
-      // BOUNDED memory drain: k rows per event_type (bounded top-k aggregate)
-      .format("memory")
-      .queryName("stream_topk")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    graft.engine.TempIo.materialize(spark,
+    // BOUNDED memory drain: k rows per event_type (bounded top-k aggregate)
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("complete").format("memory").queryName("stream_topk")))
+    TempIo.materialize(spark,
       spark.table("stream_topk")
         .select($"event_type", posexplode($"top").as(Seq("pos", "s")))
         .select($"event_type", ($"pos" + 1).cast("long").as("rank"),
@@ -2130,30 +1815,22 @@ object Streaming {
     * by type) is a bounded frame, not a funnel. */
   def q362StreamHistogram(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = disorderedChunks(spark, sfDir)
-    val agg = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
-      .parquet(src)
+    val agg = Carve.stream(spark, disorderedChunks(spark, sfDir), eventsNormSchema,
+        ReplayFilesPerTrigger)
       .select($"event_type",
         expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) div 2500")
           .as("bucket"))
       .groupBy($"event_type", $"bucket")
       .agg(count(lit(1)).as("n"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("complete")
-      // BOUNDED memory drain: ≤ ⌈max_value/25⌉ buckets per event_type
-      .format("memory")
-      .queryName("stream_histogram")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
+    // BOUNDED memory drain: ≤ ⌈max_value/25⌉ buckets per event_type
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("complete").format("memory").queryName("stream_histogram")))
     val h = spark.table("stream_histogram")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"event_type").orderBy($"bucket")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    graft.engine.TempIo.materialize(spark,
+    TempIo.materialize(spark,
       h.withColumn("cum", sum($"n").over(w))
         .withColumn("total", sum($"n").over(
           org.apache.spark.sql.expressions.Window.partitionBy($"event_type")))
@@ -2203,24 +1880,15 @@ object Streaming {
   def q237StreamBitmap(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
     import graft.functions.BitmapAggregate._
-    val src = disorderedChunks(spark, sfDir)
-    val agg = spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
-      .parquet(src)
+    val agg = Carve.stream(spark, disorderedChunks(spark, sfDir), eventsNormSchema,
+        ReplayFilesPerTrigger)
       .filter($"event_type".isin("purchase", "error"))
       .groupBy($"event_type")
       .agg(bitmapBits($"user_id", 16384).as("bm"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(agg).writeStream
-      .outputMode("complete")
-      // BOUNDED memory drain: one fixed-width bitmap row per event_type
-      .format("memory")
-      .queryName("stream_bitmap")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    val bm = graft.engine.TempIo.materialize(spark,
-      spark.table("stream_bitmap"))
+    // BOUNDED memory drain: one fixed-width bitmap row per event_type
+    Replay.run(spark)(_.drain(agg)(
+      _.outputMode("complete").format("memory").queryName("stream_bitmap")))
+    val bm = TempIo.materialize(spark, spark.table("stream_bitmap"))
     val p = bm.filter($"event_type" === "purchase").select($"bm".as("pbm"))
     val e = bm.filter($"event_type" === "error").select($"bm".as("ebm"))
     p.crossJoin(broadcast(e))
@@ -2292,14 +1960,10 @@ object Streaming {
       .groupBy($"tier")
       .agg(count(lit(1)).as("n"),
         sum(graft.engine.Exact.cents($"value")).as("cents"))
-    val q = startStream(spark)(graft.plans.PlanProbe.record(enriched).writeStream
-      .outputMode("complete")
-      // BOUNDED memory drain: one row per tier (3) — complete-mode aggregate over a closed domain
-      .format("memory")
-      .queryName("asof_enrich")
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    graft.engine.TempIo.materialize(spark,
+    // BOUNDED memory drain: one row per tier (3) — complete-mode aggregate over a closed domain
+    Replay.run(spark)(_.drain(enriched)(
+      _.outputMode("complete").format("memory").queryName("asof_enrich")))
+    TempIo.materialize(spark,
       spark.table("asof_enrich").orderBy($"tier"))
   }
 
@@ -2408,132 +2072,49 @@ object Streaming {
     * streams use the q63 file-sink path). At 100 TB this exact query
     * runs unchanged with a real trigger: state is two longs per key,
     * shuffles are per-batch slices keyed by user. */
-  /** Write events as four chunk files carved by event-time QUARTER (a
-    * projection against broadcast bounds) — the IN-ORDER replay fixture
-    * for order-sensitive stateful folds (q250 EWMA, q258 hysteresis):
-    * replayed with maxFilesPerTrigger=1, batches arrive in event-time
-    * order, and a ts tie can never straddle chunks (chunk is a function
-    * of ts alone). Fixture prep, not the operator. */
-  /** The physical schema of [[writeTimeQuarterChunks]]' chunk files —
-    * the read-side contract of every quarter-chunk replay (the
+  /** The physical schema of [[timeQuarterChunks]]' chunk files — the
+    * read-side contract of every quarter-chunk replay (the
     * [[eventsNormSchema]] role, for the carved form): one definition so
     * a future column reaches all six readers or none. */
   private[graft] val quarterChunkSchema: StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", TimestampType),
     StructField("user_id", LongType), StructField("value", DoubleType)))
 
-  /** Full 4-chunk time-quarter carve, MEMOIZED per sfDir — the
-    * [[disorderedChunks]] discipline: the carve is deterministic, and
-    * six queries × two bench passes re-reading events and re-writing
-    * the same four files is pure waste. The cache owns the dir
-    * (deleteAtExit; re-validated and rebuilt if removed); callers must
-    * NOT delete it. q290's staged-subset replay COPIES chunk files
-    * from this carve into its own dir ([[stageChunksByCopy]]). */
-  private val quarterCache = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  /** Events carved into four chunks by event-time QUARTER (a projection
+    * against broadcast bounds) — the IN-ORDER replay fixture for
+    * order-sensitive stateful folds (q250 EWMA, q258 hysteresis): batches
+    * arrive in event-time order, and a ts tie can never straddle chunks
+    * (chunk is a function of ts alone). q290 stages subsets of it. */
   private[graft] def timeQuarterChunks(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      // revalidate BOTH directions of drift: the carved chunks must
-      // still exist (the cache owns a deletable temp dir), and the
-      // SOURCE fixture must be the one the chunks were carved from —
-      // a mid-JVM events.parquet regeneration otherwise keeps serving
-      // chunks of the old data to six streaming queries, failing only
-      // later as opaque gate hash mismatches (the eventsFooterSchema
-      // staleness discipline, applied to the carve).
-      val stamp = fixtureStamp(spark, s"$sfDir/events.parquet")
-      val cached = quarterCache.get(sfDir).collect {
-        case (`stamp`, d) if (1 to 4).forall(i =>
-          new java.io.File(s"$d/chunk$i.parquet").exists()) => d
-      }
-      cached.getOrElse {
-        val src = TempIo.createTempDir("graft-quarter-src-")
-        writeTimeQuarterChunks(spark, sfDir, src)
-        graft.engine.MemoTrace.built(s"timeQuarterChunks($sfDir)")
-        TempIo.deleteAtExit(src)
-        quarterCache(sfDir) = (stamp, src)
-        src
-      }
-    }
-
-  /** Full 4-chunk event_id-pmod carve (chunk i = event_id % 4 == i−1
-    * over the normalized events frame), MEMOIZED per sfDir — the
-    * [[timeQuarterChunks]] discipline applied to the q128/q144 refresh
-    * fixtures, which each used to re-scan events and re-write the same
-    * four files per call per bench pass. mtimes are pinned strictly
-    * increasing by chunk index (write order, made granularity-proof);
-    * both consumers' results are replay-order-invariant anyway (q128
-    * counts per-batch emissions per window — a set — and q144's ⊕
-    * merge is commutative), so sharing changes nothing but the wasted
-    * jobs. The cache owns the dir; callers must NOT delete it. */
-  private val pmodCache = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private[graft] def pmodChunks(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val stamp = fixtureStamp(spark, s"$sfDir/events.parquet")
-      val cached = pmodCache.get(sfDir).collect {
-        case (`stamp`, d) if (1 to 4).forall(i =>
-          new java.io.File(s"$d/chunk$i.parquet").exists()) => d
-      }
-      cached.getOrElse {
-        import spark.implicits._
-        val src = TempIo.createTempDir("graft-pmod-src-")
-        val raw = graft.engine.Tables.events(spark, sfDir)
-        (1 to 4).foreach { i =>
-          val dir = s"$src/stage$i"
-          raw.filter(pmod($"event_id", lit(4)) === i - 1)
-            .coalesce(1).write.parquet(dir)
-          val part = new java.io.File(dir).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dest = java.nio.file.Paths.get(s"$src/chunk$i.parquet")
-          java.nio.file.Files.move(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-          TempIo.deleteRecursively(dir)
-        }
-        graft.engine.MemoTrace.built(s"pmodChunks($sfDir)")
-        TempIo.deleteAtExit(src)
-        pmodCache(sfDir) = (stamp, src)
-        src
-      }
-    }
-
-  private def writeTimeQuarterChunks(spark: SparkSession, sfDir: String,
-      src: String, which: Seq[Int] = 1 to 4): Unit = {
-    import spark.implicits._
-    val raw = Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"value")
-    val b = raw.agg(min(unix_micros($"ts")).as("t0"),
-      max(unix_micros($"ts")).as("t1"))
-    val chunked = raw.crossJoin(broadcast(b))
-      .withColumn("c",
-        expr("(unix_micros(ts) - t0) * 4 div (t1 - t0 + 1) + 1"))
-    which.foreach { i =>
-      val dir = s"$src/stage$i"
-      chunked.filter($"c" === i)
+    Carve(spark, sfDir, "timeQuarterChunks", "events") {
+      import spark.implicits._
+      val raw = Tables.events(spark, sfDir)
         .select($"event_id", $"ts", $"user_id", $"value")
-        .coalesce(1).write.parquet(dir)
-      val part = new java.io.File(dir).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dest = java.nio.file.Paths.get(s"$src/chunk$i.parquet")
-      java.nio.file.Files.move(part.toPath, dest)
-      // FileStreamSource orders same-batch discoveries by modification
-      // time; the order-sensitive EWMA/hysteresis folds (q250/q258/
-      // q266/q267) need chunk1..4 replayed in write order, so each
-      // chunk's mtime is PINNED strictly increasing rather than left
-      // to filesystem timestamp granularity (coarse mtimes could tie
-      // and make micro-batch order undefined).
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      TempIo.deleteRecursively(dir)
+      val b = raw.agg(min(unix_micros($"ts")).as("t0"),
+        max(unix_micros($"ts")).as("t1"))
+      val chunked = raw.crossJoin(broadcast(b))
+        .withColumn("c",
+          expr("(unix_micros(ts) - t0) * 4 div (t1 - t0 + 1) + 1"))
+      (1 to 4).map(i => chunked.filter($"c" === i)
+        .select($"event_id", $"ts", $"user_id", $"value"))
     }
-  }
+
+  /** Events carved into four chunks by event_id pmod 4 (chunk i =
+    * event_id % 4 == i−1) — the q128/q144 refresh fixture. Both
+    * consumers' results are replay-order-invariant (q128 counts
+    * per-batch emissions per window — a set — and q144's ⊕ merge is
+    * commutative). */
+  private[graft] def pmodChunks(spark: SparkSession, sfDir: String): String =
+    Carve(spark, sfDir, "pmodChunks", "events") {
+      import spark.implicits._
+      val raw = Tables.events(spark, sfDir)
+      (1 to 4).map(i => raw.filter(pmod($"event_id", lit(4)) === i - 1))
+    }
 
   def q250StreamEwma(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = timeQuarterChunks(spark, sfDir)
-    val updates = spark.readStream
-      .schema(quarterChunkSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
-      .parquet(src)
+    val updates = Carve.stream(spark, timeQuarterChunks(spark, sfDir),
+        quarterChunkSchema, ReplayFilesPerTrigger)
       .select($"user_id", unix_micros($"ts").as("tus"), $"event_id",
         graft.engine.Exact.cents($"value").as("units"))
       .as[(Long, Long, Long, Long)]
@@ -2559,13 +2140,11 @@ object Streaming {
     // the sink backs the lazy result, so no driver materialization
     val drained = drainUpdatesToFiles(spark,
       updates.toDF("user_id", "n_events", "ewma_units"))
-    val result = (
-      drained
-        .groupBy($"user_id")
-        .agg(max($"n_events").as("n_events"),
-          max_by($"ewma_units", $"n_events").as("ewma_units"))
-        .orderBy($"user_id"))
-    result
+    drained
+      .groupBy($"user_id")
+      .agg(max($"n_events").as("n_events"),
+        max_by($"ewma_units", $"n_events").as("ewma_units"))
+      .orderBy($"user_id")
   }
 
   /** The identical integer fold over each user's time-ordered values:
@@ -2603,12 +2182,8 @@ object Streaming {
     * emission. State: four longs per key. */
   def q258StreamAlerts(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val src = timeQuarterChunks(spark, sfDir)
-    val updates = spark.readStream
-      .schema(quarterChunkSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
-      .parquet(src)
+    val updates = Carve.stream(spark, timeQuarterChunks(spark, sfDir),
+        quarterChunkSchema, ReplayFilesPerTrigger)
       .select($"user_id", unix_micros($"ts").as("tus"), $"event_id",
         graft.engine.Exact.cents($"value").as("units"))
       .as[(Long, Long, Long, Long)]
@@ -2633,14 +2208,12 @@ object Streaming {
     // the sink backs the lazy result, so no driver materialization
     val drained = drainUpdatesToFiles(spark,
       updates.toDF("user_id", "n_events", "n_alerts", "n_high"))
-    val result = (
-      drained
-        .groupBy($"user_id")
-        .agg(max($"n_events").as("n_events"),
-          max_by($"n_alerts", $"n_events").as("n_alerts"),
-          max_by($"n_high", $"n_events").as("n_high"))
-        .orderBy($"user_id"))
-    result
+    drained
+      .groupBy($"user_id")
+      .agg(max($"n_events").as("n_events"),
+        max_by($"n_alerts", $"n_events").as("n_alerts"),
+        max_by($"n_high", $"n_events").as("n_high"))
+      .orderBy($"user_id")
   }
 
   /** Alerts = maximal H-runs of the per-user time-ordered H/L string
@@ -2705,22 +2278,14 @@ object Streaming {
     * the oracle. */
   def q266StreamTypeCounts(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val src = timeQuarterChunks(spark, sfDir)
       // event_type is not in the quarter-chunk projection; re-derive it
       // deterministically from event_id via a broadcast join against the
       // batch table (fixture plumbing, not the operator)
       val types = Tables.events(spark, sfDir)
         .select($"event_id".as("eid"), $"event_type")
-      val updates = spark.readStream
-        .schema(quarterChunkSchema)
-        .option("pathGlobFilter", "chunk*.parquet")
-        .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
-        .parquet(src)
+      val updates = Carve.stream(spark, src, quarterChunkSchema, ReplayFilesPerTrigger)
         .join(broadcast(types), $"event_id" === $"eid")
         .select($"user_id", $"event_type")
         .as[(Long, String)]
@@ -2733,17 +2298,10 @@ object Streaming {
       // backs the lazy result, so no driver materialization
       val drained = drainToFileSink(spark,
         updates.toDF("user_id", "event_type", "counts"))
-      val result = (
-        drained
-          .groupBy($"user_id", $"event_type")
-          .agg(max($"counts").as("counts"))
-          .orderBy($"user_id", $"event_type"))
-      result
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+      drained
+        .groupBy($"user_id", $"event_type")
+        .agg(max($"counts").as("counts"))
+        .orderBy($"user_id", $"event_type")
     }
   }
 
@@ -2805,17 +2363,9 @@ object Streaming {
     * "5 most recent events per user, in time order" — the oracle. */
   def q267StreamLastK(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = timeQuarterChunks(spark, sfDir)
-      val updates = spark.readStream
-        .schema(quarterChunkSchema)
-        .option("pathGlobFilter", "chunk*.parquet")
-        .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
-        .parquet(src)
+    withRocksDb(spark) {
+      val updates = Carve.stream(spark, timeQuarterChunks(spark, sfDir),
+          quarterChunkSchema, ReplayFilesPerTrigger)
         .select($"user_id", unix_micros($"ts").as("tus"), $"event_id")
         .as[(Long, Long, Long)]
         .groupByKey(_._1)
@@ -2827,18 +2377,11 @@ object Streaming {
       // backs the lazy result, so no driver materialization
       val drained = drainToFileSink(spark,
         updates.toDF("user_id", "n_events", "last5"))
-      val result = (
-        drained
-          .groupBy($"user_id")
-          .agg(max($"n_events").as("n_events"),
-            max_by($"last5", $"n_events").as("last5"))
-          .orderBy($"user_id"))
-      result
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+      drained
+        .groupBy($"user_id")
+        .agg(max($"n_events").as("n_events"),
+          max_by($"last5", $"n_events").as("last5"))
+        .orderBy($"user_id")
     }
   }
 
@@ -2964,17 +2507,8 @@ object Streaming {
     * ever find its session prematurely timer-closed. */
   def q274TimerSessions(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = timeQuarterChunks(spark, sfDir)
-      val sessions = spark.readStream
-        .schema(quarterChunkSchema)
-        .option("pathGlobFilter", "chunk*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    withRocksDb(spark) {
+      val sessions = Carve.stream(spark, timeQuarterChunks(spark, sfDir), quarterChunkSchema)
         .withWatermark("ts", s"$TimerDelayHours hours")
         .select($"user_id", unix_micros($"ts").as("tus"), $"event_id")
         .as[(Long, Long, Long)]
@@ -2987,13 +2521,7 @@ object Streaming {
       // lazy result, so no driver materialization
       val drained = drainToFileSink(spark,
         sessions.toDF("user_id", "n_events", "start_us", "end_us"))
-      val result = drained.orderBy($"user_id", $"start_us")
-      result
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+      drained.orderBy($"user_id", $"start_us")
     }
   }
 
@@ -3223,28 +2751,21 @@ object Streaming {
     import spark.implicits._
     val src = disorderedChunks(spark, sfDir)
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val q = startStream(spark)(spark.readStream
-      .schema(eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .transform(graft.plans.PlanProbe.record).writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        val r = batch.agg(count(lit(1)), countDistinct(col("user_id")))
-          .head()
-        buf.synchronized { buf += ((epochId, r.getLong(0), r.getLong(1))) }
-        ()
-      }
-      .trigger(Trigger.AvailableNow()))
-    q.awaitTermination()
-    graft.engine.TempIo.materialize(spark,
+    Replay.run(spark)(_.drain(Carve.stream(spark, src, eventsNormSchema))(
+      _.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+          val r = batch.agg(count(lit(1)), countDistinct(col("user_id")))
+            .head()
+          buf.synchronized { buf += ((epochId, r.getLong(0), r.getLong(1))) }
+          ()
+        }))
+    TempIo.materialize(spark,
       buf.toSeq.toDF("batch_id", "n_rows", "n_users")
         .orderBy($"batch_id"))
   }
 
   /** Batch twin: re-derives each chunk's membership from the
-    * displacement formula in [[writeDisorderedChunks]], emulating
+    * displacement formula in [[disorderedChunks]], emulating
     * Spark's TRUNCATING integer division (DuckDB `//` floors; the
     * displaced offset goes negative for small ids, where the two
     * disagree — the repo's floor-division rule, applied in reverse). */
@@ -3283,22 +2804,15 @@ object Streaming {
     * moves one row per (file, group). */
   def q396StreamAggPushdown(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val out = graft.engine.TempIo.createTempDir("graft-sagg-")
-    val ckpt = graft.engine.TempIo.createTempDir("graft-sagg-ckpt-")
-    try {
+    Replay.run(spark) { r =>
+      val out = r.dir("graft-sagg-")
       // readEventsStream's contract: ts is ALREADY normalized
-      val q = startStream(spark)(readEventsStream(spark, sfDir)
+      r.drain(readEventsStream(spark, sfDir)
         .select($"event_type".as("etype"), $"user_id".as("uid"),
           expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-        .transform(graft.plans.PlanProbe.record).writeStream
-        .format("graftsink")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-      graft.engine.TempIo.materialize(spark,
+            .as("cents")))(
+        _.format("graftsink").option("path", out).outputMode("append"))
+      TempIo.materialize(spark,
         spark.read.format("graftsink").load(out)
           .groupBy($"etype")
           .agg(count(lit(1)).as("n_events"),
@@ -3306,9 +2820,6 @@ object Streaming {
             min($"cents").as("min_cents"),
             max($"cents").as("max_cents"))
           .orderBy($"etype"))
-    } finally {
-      graft.engine.TempIo.deleteRecursively(out)
-      graft.engine.TempIo.deleteRecursively(ckpt)
     }
   }
 

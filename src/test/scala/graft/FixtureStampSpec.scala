@@ -19,9 +19,9 @@ import graft.streaming.Streaming
   *      under `mockdfs:` (different physical ts encoding, different
   *      stamp) must invalidate the cached schema — a stale hit here IS
   *      round 6's silent 1000× timestamp shrink.
-  *   2. [[Streaming.timeQuarterChunks]]: a regenerated events.parquet
-  *      must rebuild the carved chunk files, not keep serving chunks of
-  *      the OLD data to the six order-sensitive streaming replays.
+  *   2. [[Streaming.timeQuarterChunks]] and [[Streaming.disorderedChunks]]:
+  *      a regenerated events.parquet must rebuild the carved chunk
+  *      files, not keep serving chunks of the OLD data to the replays.
   */
 class FixtureStampSpec extends SparkTestBase {
 
@@ -86,29 +86,37 @@ class FixtureStampSpec extends SparkTestBase {
     }
   }
 
-  test("timeQuarterChunks rebuilds the carve when the source fixture changes") {
-    val local = TempIo.createTempDir("stamp-quarter-")
+  /** Carve `local`'s events fixture with `carve` before and after an
+    * in-place regeneration (40 → 60 rows): the second carve must be a
+    * rebuild over the NEW data, not a replay of the old chunks. */
+  private def assertRebuiltOnRegeneration(name: String, schema: StructType)(
+      carve: String => String): Unit = {
+    val local = TempIo.createTempDir(s"stamp-$name-")
+    def rows(dir: String) = spark.read.schema(schema)
+      .option("pathGlobFilter", "chunk*.parquet").parquet(dir).count()
     try {
       writeSingleFile(eventsFrame(40, tsAsLongNanos = false),
         s"$local/events.parquet", 1000000000000L)
-      val d1 = Streaming.timeQuarterChunks(spark, local)
+      val d1 = carve(local)
       // memoized while the fixture is unchanged
-      assert(Streaming.timeQuarterChunks(spark, local) == d1)
-      val n1 = spark.read
-        .schema(Streaming.quarterChunkSchema)
-        .option("pathGlobFilter", "chunk*.parquet").parquet(d1).count()
-      assert(n1 == 40)
+      assert(carve(local) == d1)
+      assert(rows(d1) == 40)
 
-      // regenerate the fixture with a different row count: the carve
-      // must be rebuilt from the NEW data, not replayed from the old
       writeSingleFile(eventsFrame(60, tsAsLongNanos = false),
         s"$local/events.parquet", 1000000060000L)
-      val d2 = Streaming.timeQuarterChunks(spark, local)
-      assert(d2 != d1, "stale quarter carve survived fixture regeneration")
-      val n2 = spark.read
-        .schema(Streaming.quarterChunkSchema)
-        .option("pathGlobFilter", "chunk*.parquet").parquet(d2).count()
-      assert(n2 == 60)
+      val d2 = carve(local)
+      assert(d2 != d1, s"stale $name carve survived fixture regeneration")
+      assert(rows(d2) == 60)
     } finally TempIo.deleteRecursively(local)
+  }
+
+  test("timeQuarterChunks rebuilds the carve when the source fixture changes") {
+    assertRebuiltOnRegeneration("quarter", Streaming.quarterChunkSchema)(
+      Streaming.timeQuarterChunks(spark, _))
+  }
+
+  test("disorderedChunks rebuilds the carve when the source fixture changes") {
+    assertRebuiltOnRegeneration("disorder", Streaming.eventsNormSchema)(
+      Streaming.disorderedChunks(spark, _))
   }
 }

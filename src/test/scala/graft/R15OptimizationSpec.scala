@@ -8,8 +8,8 @@ import graft.engine.DistRank
 /** Round-15 optimization pins: the binary-search bucket assignment must
   * equal the interpreted fold it replaced (duplicates, nulls, empty
   * cuts included), ranks must be invariant to the derived bucket count,
-  * and the memoized pmod carve must partition the events fixture
-  * exactly. */
+  * and every memoized chunk carve must partition its source exactly,
+  * with pinned chunk order, and be built once. */
 class R15OptimizationSpec extends SparkTestBase {
 
   test("bucketIndexExpr equals the interpreted aggregate() fold on " +
@@ -84,23 +84,51 @@ class R15OptimizationSpec extends SparkTestBase {
     } finally graft.engine.TempIo.deleteRecursively(dir)
   }
 
+  /** One case per [[graft.streaming.Carve]]: the carve's memo name, a
+    * call that returns its dir, its chunk count, and the ids of the
+    * source rows it cuts (with the id column's name). */
+  private case class CarveCase(name: String, carve: () => String, chunks: Int,
+      idCol: String, sourceIds: () => Seq[Long])
+
   test("memoized pmod carve partitions events exactly and serves the " +
     "same directory on a second call") {
-    val d1 = graft.streaming.Streaming.pmodChunks(spark, sf)
-    val d2 = graft.streaming.Streaming.pmodChunks(spark, sf)
-    assert(d1 === d2, "second call must hit the memo")
-    val events = graft.engine.Tables.events(spark, sf)
-    val total = events.count()
-    val back = spark.read
-      .schema(graft.streaming.Streaming.eventsNormSchema)
-      .option("pathGlobFilter", "chunk*.parquet").parquet(d1)
-    assert(back.count() === total, "carve must preserve every row")
-    // chunk i holds exactly the event_id % 4 == i-1 slice
     import spark.implicits._
+    import graft.streaming.Streaming
+    def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col(c)).as[Long].collect().toSeq.sorted
+    val eventIds = () => ids(graft.engine.Tables.events(spark, sf), "event_id")
+    val cases = Seq(
+      CarveCase("pmodChunks", () => Streaming.pmodChunks(spark, sf), 4, "event_id", eventIds),
+      CarveCase("timeQuarterChunks", () => Streaming.timeQuarterChunks(spark, sf), 4,
+        "event_id", eventIds),
+      CarveCase("disorderedChunks", () => Streaming.disorderedChunks(spark, sf), 4,
+        "event_id", eventIds),
+      // q228's single chunk holds every row
+      CarveCase("corruptedChunk", () => Streaming.corruptedChunk(spark, sf), 1,
+        "event_id", eventIds),
+      CarveCase("annQueryChunks", () => graft.engine.Similarity.annQueryChunks(spark, sf), 3,
+        "vec_id", () => ids(graft.engine.Tables.embeddings(spark, sf)
+          .filter($"vec_id" % graft.engine.Similarity.Q241QueryMod === 0), "vec_id")))
+    cases.foreach { c =>
+      val d1 = c.carve()
+      assert(c.carve() === d1, s"${c.name}: second call must hit the memo")
+      assert(graft.engine.MemoTrace.log.count(_._1 == s"${c.name}($sf)") === 1,
+        s"${c.name}: built more than once")
+      val files = (1 to c.chunks).map(i => new java.io.File(s"$d1/chunk$i.parquet"))
+      val chunkIds = files.map(f => ids(spark.read.parquet(f.getPath), c.idCol))
+      assert(chunkIds.forall(_.nonEmpty), s"${c.name}: an empty chunk")
+      assert(chunkIds.flatten.sorted === c.sourceIds(),
+        s"${c.name}: chunks must partition the source rows exactly")
+      val mtimes = files.map(_.lastModified())
+      assert(mtimes.zip(mtimes.drop(1)).forall { case (a, b) => a < b },
+        s"${c.name}: chunk mtimes must strictly increase with the index: $mtimes")
+    }
+    // pmod chunk i holds exactly the event_id % 4 == i-1 slice
+    val pmod = Streaming.pmodChunks(spark, sf)
     (1 to 4).foreach { i =>
-      val ids = spark.read.parquet(s"$d1/chunk$i.parquet")
+      val ids = spark.read.parquet(s"$pmod/chunk$i.parquet")
         .select($"event_id").collect().map(_.getLong(0))
-      assert(ids.nonEmpty && ids.forall(_ % 4 == i - 1), s"chunk$i membership")
+      assert(ids.forall(_ % 4 == i - 1), s"chunk$i membership")
     }
   }
 }

@@ -15,7 +15,9 @@ import graft.streaming.Streaming
 /** Pins [[Streaming.startStream]]: a repeated stream run reuses the
   * JVM-wide codegen cache, the caller's artifact-isolation setting
   * survives every start, a session with its own artifacts keeps
-  * isolation, and no stream in `src/main` starts any other way. */
+  * isolation, no stream in `src/main` starts any other way, and no
+  * stream lifecycle or chunk-file write lives outside
+  * [[graft.streaming.Replay]] and [[graft.streaming.Carve]]. */
 class StreamStartSpec extends SparkTestBase {
   private val Isolation = "spark.sql.artifact.isolation.enabled"
 
@@ -104,21 +106,26 @@ class StreamStartSpec extends SparkTestBase {
     } finally jar.delete()
   }
 
+  private def sources(d: File): Seq[File] =
+    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) sources(f)
+      else if (f.getName.endsWith(".scala") || f.getName.endsWith(".java")) Seq(f)
+      else Nil
+    }
+
+  private lazy val mainSources: Seq[File] = {
+    val files = sources(new File("src/main")).sortBy(_.getPath)
+    assert(files.exists(_.getName == "Streaming.scala"), "src/main not found")
+    files
+  }
+
   /** Source sweep, like the plan sweeps in PlanAssertionsSpec: a
     * `DataStreamWriter.start()` (or `toTable`, which also starts a
     * stream) anywhere in `src/main` outside [[Streaming.startStream]]
     * would bring back one codegen compile per class per stream run. */
   test("no stream in src/main starts outside Streaming.startStream") {
     val starts = """\.(start|toTable)\(""".r
-    def sources(d: File): Seq[File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) sources(f)
-        else if (f.getName.endsWith(".scala") || f.getName.endsWith(".java")) Seq(f)
-        else Nil
-      }
-    val files = sources(new File("src/main"))
-    assert(files.exists(_.getName == "Streaming.scala"), "src/main not found")
-    val problems = files.sortBy(_.getPath).flatMap { f =>
+    val problems = mainSources.flatMap { f =>
       val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
       // the helper's own body: from its def to the first blank line
       val helper =
@@ -135,5 +142,28 @@ class StreamStartSpec extends SparkTestBase {
     }
     assert(problems.isEmpty,
       "start streams through Streaming.startStream:\n" + problems.mkString("\n"))
+  }
+
+  /** The other half of the sweep: a stream's lifecycle (writer,
+    * checkpoint, trigger, await) is typed only in the replay harness,
+    * and chunk files are named and mtime-pinned only by the carve, so a
+    * new streaming query cannot grow its own hand-rolled copy of
+    * either. Comment lines are skipped; `"checkpointLocation"` is the
+    * writer option, not the DataSourceV2 parameter of that name. */
+  test("stream lifecycles live only in Replay and chunk files are written only by Carve") {
+    val owned = Seq(
+      "Replay.scala" -> """\.writeStream\b|awaitTermination|"checkpointLocation"|Trigger\.AvailableNow""".r,
+      "Carve.scala" -> """setLastModifiedTime|chunk(\$\{[^}]*\}|\$\w+|\d+)\.parquet""".r)
+    val problems = for {
+      f <- mainSources
+      (l, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toVector.zipWithIndex
+      trimmed = l.trim
+      if !(trimmed.startsWith("*") || trimmed.startsWith("/*") || trimmed.startsWith("//"))
+      (owner, pattern) <- owned
+      if f.getName != owner && pattern.findFirstIn(l).isDefined
+    } yield s"${f.getPath}:${i + 1}: belongs in $owner: $trimmed"
+    assert(mainSources.exists(_.getName == "Replay.scala") &&
+      mainSources.exists(_.getName == "Carve.scala"), "harness sources not found")
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 import java.util.Locale
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line the driver parses. The line must stay SHORT and be
@@ -29,23 +28,17 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val (steal0, total0) = cpuStat()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Whole-stage-codegen compile cache (static conf, default 100
-      // entries): a 415-query catalog holds thousands of distinct
-      // codegen units, so at the default size EVERY pass recompiles
-      // every plan — measured 34% of a 20-query subset's wall-clock
-      // (OPTIMIZATION_r15.md). Sized for the catalog, env-overridable;
-      // any long-lived multi-query driver (a real analytics service)
-      // raises exactly this. Compiled-class footprint at 10k entries
-      // is tens of MB of metaspace — far under the driver heap.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Opt-in subset for targeted measurements (scale-exponent carves,
+    // reliable-cut re-timings): comma-separated short or full names,
+    // e.g. SPARK_GRAFT_BENCH_ONLY=q242,q302. Default: every query. A
+    // typo'd name throws rather than shrinking the run silently.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val selected = only.fold(SparkEntry.queries) { o =>
+      val wanted = SparkEntry.resolve(o).map(_._1).toSet
+      SparkEntry.queries.filter { case (n, _) => wanted(n) }
+    }
+    val spark = GraftSession(GraftSession.cores)
     // Warm the JVM once (codegen, parquet reader, shuffle machinery, and
     // the Structured Streaming stack) so the first timed query doesn't
     // absorb one-time JIT/classload costs.
@@ -61,9 +54,7 @@ object Bench {
     // that throws yields None for the pass — failures are reported in an
     // "errors" list and excluded from the min/total rather than letting a
     // fast exception path masquerade as a legitimate time.
-    def time(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[Double] = {
+    def time(name: String, fn: SparkEntry.Query): Option[Double] = {
       // attribution for session-memo builds (VERDICT r14 item 6): the
       // build cost of a shared frame lands inside whichever timed query
       // touches it first — record which (an AtomicReference set, ~ns)
@@ -73,22 +64,7 @@ object Bench {
                catch { case _: Throwable => false }
       if (ok) Some((System.nanoTime() - t0) / 1e9) else None
     }
-    // Opt-in subset for targeted measurements (scale-exponent carves,
-    // reliable-cut re-timings): comma-separated short names, e.g.
-    // SPARK_GRAFT_BENCH_ONLY=q242,q302. Default: every query.
     def short(n: String) = n.takeWhile(_ != '_')
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(o => o(n) || o(short(n))) }
-    // a typo'd subset name would otherwise shrink the run SILENTLY and
-    // the missing query could read as "measured fine" (ADVICE r11)
-    only.foreach { o =>
-      val unmatched = o.filterNot(x =>
-        SparkEntry.queries.keysIterator.exists(n => n == x || short(n) == x))
-      require(unmatched.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names match no query: ${unmatched.mkString(", ")}")
-    }
     def pass(): Map[String, Option[Double]] =
       selected.map { case (name, fn) => name -> time(name, fn) }
     val (p1, p2) = (pass(), pass())

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,13 @@ object Verify {
       sys.exit(2)
     }
     val (sfDir, outDir) = (args(0), args(1))
-    // optional comma-separated subset for fast local iteration; the
-    // driver always calls with 2 args → full run
+    // optional comma-separated subset (short or full names) for fast
+    // local iteration; the driver always calls with 2 args → full run
     val only: Option[Set[String]] =
-      if (args.length == 3) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // catalog-sized codegen compile cache — see Bench.scala
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      if (args.length == 3) Some(SparkEntry.resolve(args(2).split(",").map(_.trim)
+        .filter(_.nonEmpty).toSeq).map(_._1).toSet)
+      else None
+    val spark = GraftSession(GraftSession.cores)
     new java.io.File(outDir).mkdirs()
     // Fixture-contract canary: if the driver regenerated testdata with a
     // different physical schema (round 6 lost 113 queries to exactly

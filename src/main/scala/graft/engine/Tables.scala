@@ -22,10 +22,10 @@ object Tables {
 
   /** Session-scoped memo of each table's LOADED schema, so repeated
     * reads of the same immutable fixture skip per-call footer
-    * inference (~60-90 ms/read measured by [[graft.tools.ReadCostProbe]];
-    * the catalog makes ~2 reads per query × 415 queries × ≥2 bench
-    * passes, so inference was a minutes-scale per-run tax). This memos
-    * METADATA only — every read still scans the parquet files — and is
+    * inference (measured at ~60-90 ms per read; the catalog makes
+    * ~2 reads per query × 415 queries × ≥2 bench passes, so inference
+    * was a minutes-scale per-run tax). This memos METADATA only —
+    * every read still scans the parquet files — and is
     * triple-validated: the creating session must match (loaded types
     * can depend on session conf, e.g. nanosAsLong), and the path's
     * mtime/size stamp must match (a rewritten fixture re-infers, same

@@ -12,19 +12,21 @@ class StreamingSpec extends SparkTestBase {
 
   test("ingest writes date=/hour= partitioned parquet (T4 layout) with full row coverage") {
     val out = Files.createTempDirectory("graft-ingest-").toString
-    Streaming.runIngest(spark, sf, out)
-    val dateDirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("date="))
-    assert(dateDirs.nonEmpty)
-    val hourDirs = new java.io.File(s"$out/${dateDirs.head}").listFiles()
-      .filter(_.isDirectory).map(_.getName)
-    assert(hourDirs.forall(_.startsWith("hour=")))
-    val written = spark.read.parquet(out)
-    assert(written.count() == Tables.events(spark, sf).count())
-    // projection contract: key synthesized, props parsed
-    assert(written.columns.toSet ==
-      Set("key", "ts", "user_id", "event_type", "value", "k", "date", "hour"))
-    assert(written.filter($"k".isNull).count() == 0)
+    try {
+      Streaming.runIngest(spark, sf, out)
+      val dateDirs = new java.io.File(out).listFiles()
+        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("date="))
+      assert(dateDirs.nonEmpty)
+      val hourDirs = new java.io.File(s"$out/${dateDirs.head}").listFiles()
+        .filter(_.isDirectory).map(_.getName)
+      assert(hourDirs.forall(_.startsWith("hour=")))
+      val written = spark.read.parquet(out)
+      assert(written.count() == Tables.events(spark, sf).count())
+      // projection contract: key synthesized, props parsed
+      assert(written.columns.toSet ==
+        Set("key", "ts", "user_id", "event_type", "value", "k", "date", "hour"))
+      assert(written.filter($"k".isNull).count() == 0)
+    } finally graft.engine.TempIo.deleteRecursively(out)
   }
 
   test("q27 stream window equals the batch aggregation") {
@@ -227,11 +229,13 @@ class StreamingSpec extends SparkTestBase {
       q.awaitTermination()
       spark.read.parquet(out).count()
     }
-    val first = run()
-    assert(first == Tables.events(spark, sf).count())
-    val second = run()
-    assert(second == first,
-      "the checkpoint records consumed files, so a resumed run must be a no-op")
+    try {
+      val first = run()
+      assert(first == Tables.events(spark, sf).count())
+      val second = run()
+      assert(second == first,
+        "the checkpoint records consumed files, so a resumed run must be a no-op")
+    } finally Seq(out, checkpoint).foreach(graft.engine.TempIo.deleteRecursively)
   }
 
   test("STATEFUL restart: windowed-agg state survives a checkpoint restart") {
@@ -302,15 +306,17 @@ class StreamingSpec extends SparkTestBase {
 
   test("schema evolution: mergeSchema unions batch schemas, old rows null-fill") {
     val dir = Files.createTempDirectory("graft-evolve-").toString
-    val base = Tables.events(spark, sf).select($"event_id", $"event_type")
-    base.write.mode("append").parquet(dir)
-    base.withColumn("v2_flag", lit(1L)).write.mode("append").parquet(dir)
-    val merged = spark.read.option("mergeSchema", "true").parquet(dir)
-    assert(merged.columns.toSet == Set("event_id", "event_type", "v2_flag"))
-    val n = base.count()
-    assert(merged.count() == 2 * n)
-    assert(merged.filter($"v2_flag".isNull).count() == n,
-      "rows written before the column existed read back as null")
+    try {
+      val base = Tables.events(spark, sf).select($"event_id", $"event_type")
+      base.write.mode("append").parquet(dir)
+      base.withColumn("v2_flag", lit(1L)).write.mode("append").parquet(dir)
+      val merged = spark.read.option("mergeSchema", "true").parquet(dir)
+      assert(merged.columns.toSet == Set("event_id", "event_type", "v2_flag"))
+      val n = base.count()
+      assert(merged.count() == 2 * n)
+      assert(merged.filter($"v2_flag".isNull).count() == n,
+        "rows written before the column existed read back as null")
+    } finally graft.engine.TempIo.deleteRecursively(dir)
   }
 
   test("q89 stream-static join equals the batch enrichment") {

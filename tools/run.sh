@@ -12,6 +12,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 # GRAFT_JAVA_OPTS: extra -D flags (e.g. -Dspark.graft.loops.cut=reliable)
-exec java $ADD_OPENS $GRAFT_JAVA_OPTS -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" "$@"
+exec java $ADD_OPENS $GRAFT_JAVA_OPTS -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"

@@ -12,7 +12,7 @@
 #       # skew mode (VERDICT r9 item 4): one hot key carries ~20% of
 #       # rows on events.user_id and lineitem.l_suppkey; runs the
 #       # join/window-heavy families against the DuckDB oracle on the
-#       # skewed carve, then graft.tools.SkewProbe for measured AQE
+#       # skewed carve, then `graft.tools.Run skew` for measured AQE
 #       # skew-split evidence.
 #
 # Record the green run in PLANS.md per round workflow. Requires
@@ -38,5 +38,5 @@ python3 tools/make_carve.py "/root/testdata/$SRC" "$K" "$OUT" $SKEWARGS
 tools/run.sh graft.Verify "$OUT" /tmp/graft_carve_verify "$QUERIES"
 python3 tools/check.py "$OUT" /tmp/graft_carve_verify
 if [ "$MODE" = "skew" ]; then
-  SPARK_GRAFT_SF_DIR="$OUT" tools/run.sh graft.tools.SkewProbe
+  tools/run.sh graft.tools.Run skew "$OUT"
 fi

@@ -20,16 +20,14 @@ object GraftSession {
   def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(_.trim.toInt)
 
   /** A `local[cores]` session with one shuffle partition per core, UTC
-    * session time, the catalog-sized codegen cache, no UI and WARN logs. */
-  def apply(cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
+    * session time, the catalog-sized codegen cache and no UI. Logs are
+    * at WARN from JVM start (`log4j2.properties` in the resources). */
+  def apply(cores: Int): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

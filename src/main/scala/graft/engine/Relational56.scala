@@ -204,20 +204,17 @@ object Relational56 {
        GROUP BY d.cls, m.med, a.mad
        ORDER BY d.cls"""
 
-  private val coOrderCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** The weighted part co-order pair frame — (u, v, cnt) with u < v,
-    * cnt = shared distinct orders — MEMOIZED per sfDir and
-    * localCheckpoint'ed (the Dedup.corpusBands discipline): q360's
+    * cnt = shared distinct orders — localCheckpoint'ed in [[Memo]]
+    * (the Dedup.corpusBands discipline): q360's
     * min-plus SSSP and q386's quadrangle census both build their graph
     * from this exact frame, and the distinct-(order, part) self-join
     * that derives it is the heaviest step of both queries, so it runs
-    * ONCE per session per dir instead of once per query per bench
+    * ONCE per session per fixture instead of once per query per bench
     * pass. At cluster scale the checkpoint becomes a persisted table
     * bucketed on the pair. */
   private[engine] def coOrderCounts(spark: SparkSession, sfDir: String): DataFrame =
-    Memo.byDir(coOrderCache, spark, sfDir, "coOrderCounts") {
+    Memo[DataFrame](spark, "coOrderCounts", sfDir, Seq("lineitem")) {
       import spark.implicits._
       val li = Tables.lineitem(spark, sfDir)
         .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"))

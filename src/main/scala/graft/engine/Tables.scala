@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, min, timestamp_micros, to_date}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table access layer for the driver-generated parquet tables
   * (`/root/repo/TESTDATA.md`). Schemas come from the parquet footers —
@@ -20,43 +20,21 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
-  /** Session-scoped memo of each table's LOADED schema, so repeated
-    * reads of the same immutable fixture skip per-call footer
-    * inference (measured at ~60-90 ms per read; the catalog makes
-    * ~2 reads per query × 415 queries × ≥2 bench passes, so inference
-    * was a minutes-scale per-run tax). This memos METADATA only —
-    * every read still scans the parquet files — and is
-    * triple-validated: the creating session must match (loaded types
-    * can depend on session conf, e.g. nanosAsLong), and the path's
-    * mtime/size stamp must match (a rewritten fixture re-infers, same
-    * discipline as Memo.byDir's fixture stamps). First read per
-    * (session, path) infers from footers exactly as before. */
-  private val schemaCache = new scala.collection.concurrent.TrieMap[
-    String, (SparkSession, Long, org.apache.spark.sql.types.StructType)]
-
-  /** Shallow content stamp: top-level mtimes+lengths. Parquet fixtures
-    * are a single file or a flat directory of part files, so an
-    * in-place rewrite always moves this stamp. */
-  private def pathStamp(path: String): Long = {
-    val f = new java.io.File(path)
-    val base = f.lastModified() * 1000003L + f.length()
-    val kids = Option(f.listFiles()).getOrElse(Array.empty)
-    kids.foldLeft(base)((acc, k) =>
-      acc * 31L + k.lastModified() * 1000003L + k.length())
-  }
-
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val stamp = pathStamp(path)
-    schemaCache.get(path) match {
-      case Some((s, st, sch)) if (s eq spark) && st == stamp =>
-        spark.read.schema(sch).parquet(path)
-      case _ =>
-        val df = spark.read.parquet(path)
-        schemaCache.put(path, (spark, stamp, df.schema))
-        df
+  /** A table's LOADED schema, held in [[Memo]], so repeated reads of an
+    * unchanged fixture skip per-call footer inference (measured at
+    * ~60-90 ms per read; the catalog makes ~2 reads per query × 415
+    * queries × ≥2 bench passes, so inference was a minutes-scale
+    * per-run tax). Metadata only: every read still scans the parquet
+    * files. The entry is bound to the creating session (loaded types
+    * can depend on session conf, e.g. nanosAsLong) and to the table's
+    * fixture stamp, so a rewritten fixture is inferred again. */
+  def schema(spark: SparkSession, sfDir: String, name: String): StructType =
+    Memo[StructType](spark, s"$name.schema", sfDir, Seq(name)) {
+      spark.read.parquet(s"$sfDir/$name.parquet").schema
     }
-  }
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.schema(schema(spark, sfDir, name)).parquet(s"$sfDir/$name.parquet")
 
   /** Spread a frame that is about to enter a high per-row fan-out /
     * per-row-CPU stage (d²-fold expression fan-outs, blocking joins,

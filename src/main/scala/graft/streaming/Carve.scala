@@ -7,27 +7,23 @@ import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.engine.{MemoTrace, TempIo}
+import graft.engine.{Memo, TempIo}
 
 /** The one chunk-carve primitive behind the chunk-replay fixtures: a
   * fixture table cut into `chunk1..chunkN.parquet` files that a file
   * stream replays one (or a few) per micro-batch. Carves are pure
-  * functions of their source fixture, so each is built once per JVM and
-  * shared by every query that replays it; readers are unaffected by the
+  * functions of their source fixture, so each is a [[Memo]] entry
+  * shared across the JVM (files on disk, not bound to a session) and
+  * by every query that replays it; readers are unaffected by the
   * sharing, because each opens its own stream and checkpoint over the
   * dir. */
 private[graft] object Carve {
-
-  /** (sfDir, carve name) → (source-fixture stamp, chunk count, dir). The
-    * stamp rides in the value, so a regenerated fixture replaces its
-    * entry instead of accreting one dead entry per generation. */
-  private val memo = scala.collection.mutable.HashMap.empty[(String, String), (String, Int, String)]
 
   private def chunkFile(dir: String, i: Int): String = s"$dir/chunk$i.parquet"
 
   /** The carve `name` of `sfDir`'s `table` fixture: chunk i holds the
     * i-th frame of `chunks`, which is evaluated only when the carve is
-    * (re)built. The memo is revalidated on every call, in both
+    * (re)built. The entry is revalidated on every call, in both
     * directions of drift: the source fixture must carry the stamp the
     * chunks were carved from (a mid-JVM regeneration otherwise keeps
     * serving chunks of the old data, failing only later as opaque gate
@@ -35,20 +31,15 @@ private[graft] object Carve {
     * owns the dir and reclaims it at JVM exit; callers must not delete
     * it. */
   def apply(spark: SparkSession, sfDir: String, name: String, table: String)(
-      chunks: => Seq[DataFrame]): String = synchronized {
-    val stamp = Streaming.fixtureStamp(spark, s"$sfDir/$table.parquet")
-    memo.get((sfDir, name)).collect {
-      case (`stamp`, n, d) if (1 to n).forall(i => new File(chunkFile(d, i)).exists()) => d
-    }.getOrElse {
+      chunks: => Seq[DataFrame]): String =
+    Memo[(String, Int)](spark, name, sfDir, Seq(table), sessionBound = false,
+      usable = { case (d, n) => (1 to n).forall(i => new File(chunkFile(d, i)).exists()) }) {
       val dir = TempIo.createTempDir(s"graft-$name-")
+      TempIo.deleteAtExit(dir)
       val frames = chunks
       frames.zipWithIndex.foreach { case (df, k) => writeChunk(df, dir, k + 1) }
-      MemoTrace.built(s"$name($sfDir)")
-      TempIo.deleteAtExit(dir)
-      memo((sfDir, name)) = (stamp, frames.size, dir)
-      dir
-    }
-  }
+      (dir, frames.size)
+    }._1
 
   private def writeChunk(df: DataFrame, dir: String, i: Int): Unit = {
     val stage = s"$dir/stage$i"

@@ -142,57 +142,21 @@ object Streaming {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** The driver's events fixture has changed physical `ts` encoding
-    * across rounds (TIMESTAMP(NANOS) → TIMESTAMP_NTZ(μs)); a streaming
-    * read needs a user-supplied schema, and supplying the WRONG one
-    * silently misreads (round 6: μs read as long-nanos shrank every
-    * timestamp 1000×). So probe the parquet footer with a one-off batch
-    * read (driver-side, no data scan) and hand the stream the schema the
-    * file actually carries; cached per directory. */
-  private val footerSchemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, StructType)]
-
-  /** (mtime, length) staleness stamp for a fixture file, resolved via
-    * the path's OWN Hadoop FileSystem — `java.io.File` reports 0:0 for
-    * hdfs:// and s3a:// paths, which would silently collapse any
-    * mtime-keyed staleness protection to a constant on exactly the
-    * deployments it exists for (the readHourPartitionOrFallback probe
-    * discipline). */
-  private[graft] def fixtureStamp(spark: SparkSession, path: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val st = hp.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(hp)
-    s"${st.getModificationTime}:${st.getLen}"
-  }
-
-  private[graft] def eventsFooterSchema(spark: SparkSession, sfDir: String): StructType = {
-    // cache VALUE carries the file's (mtime, size) stamp: if the fixture
-    // is regenerated under the same path with a different physical ts
-    // encoding mid-JVM — the exact drift this probe exists for — the
-    // stale schema must not survive (the [[Carve]] re-validation
-    // discipline; a stale hit here IS the silent 1000× shrink). Keying
-    // the map by sfDir with the stamp in the value (not the key) also
-    // replaces the prior entry on regeneration instead of accreting one
-    // dead entry per regeneration.
-    val stamp = fixtureStamp(spark, s"$sfDir/events.parquet")
-    footerSchemaCache.get(sfDir) match {
-      case Some((`stamp`, schema)) => schema
-      case _ =>
-        val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-        footerSchemaCache(sfDir) = (stamp, schema)
-        schema
-    }
-  }
-
   /** File-source stream over the events table, `ts` ALREADY normalized
     * to TimestampType — downstream queries never see the physical
-    * encoding. */
+    * encoding. A streaming read needs a user-supplied schema, and the
+    * driver's fixture has changed its physical `ts` encoding across
+    * rounds (TIMESTAMP(NANOS) → TIMESTAMP_NTZ(μs)); supplying the WRONG
+    * one silently misreads (round 6: μs read as long-nanos shrank every
+    * timestamp 1000×). So the stream takes the schema the file actually
+    * carries, [[Tables.schema]], which a rewritten fixture re-infers. */
   private[graft] def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.engine.Tables.ensureNanosAsLong(spark)
+    Tables.ensureNanosAsLong(spark)
     // The file source requires a directory; pathGlobFilter pins it to
     // the events table within the sfDir.
-    graft.engine.Tables.normalizeTs(
+    Tables.normalizeTs(
       spark.readStream
-        .schema(eventsFooterSchema(spark, sfDir))
+        .schema(Tables.schema(spark, sfDir, "events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sfDir))
   }

@@ -2,48 +2,37 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.engine.TempIo
+import graft.engine.{Tables, TempIo}
 import graft.streaming.Streaming
 
-/** Pins the mid-JVM fixture-regeneration staleness protections on BOTH
-  * memoized derivations of the events fixture — and pins them through a
-  * NON-`file:` scheme, because the r12 defect was exactly that the
-  * protection keyed on `java.io.File` (mtime, size), which reads 0:0
-  * for hdfs://s3a:// paths and so silently collapsed to a constant on
-  * every deployment the protection exists for.
+/** Pins [[graft.engine.Memo]]'s fixture-stamp validity on the
+  * derivations of the events fixture, through a NON-`file:` scheme
+  * where it matters: the r12 defect was a stamp read through
+  * `java.io.File`, which reads 0:0 for hdfs://, s3a:// and `mockdfs:`
+  * paths and so collapsed to a constant on every deployment the
+  * protection exists for.
   *
-  *   1. [[Streaming.eventsFooterSchema]]: a regenerated events.parquet
-  *      under `mockdfs:` (different physical ts encoding, different
-  *      stamp) must invalidate the cached schema — a stale hit here IS
-  *      round 6's silent 1000× timestamp shrink.
+  *   1. [[Tables.table]]: a regenerated events.parquet under `mockdfs:`
+  *      (different physical ts encoding, different stamp) must be
+  *      inferred again, and [[Streaming.readEventsStream]] must read it
+  *      with its new schema — a stale schema here IS round 6's silent
+  *      1000× timestamp shrink.
   *   2. [[Streaming.timeQuarterChunks]] and [[Streaming.disorderedChunks]]:
   *      a regenerated events.parquet must rebuild the carved chunk
   *      files, not keep serving chunks of the OLD data to the replays.
   */
 class FixtureStampSpec extends SparkTestBase {
-
-  /** Write `df` as a single parquet FILE at `dest` (the fixture layout:
-    * events.parquet is one file, not a directory) with a pinned mtime —
-    * explicit, strictly different stamps per regeneration, immune to
-    * filesystem timestamp granularity. */
-  private def writeSingleFile(df: org.apache.spark.sql.DataFrame,
-      dest: String, mtimeMs: Long): Unit = {
-    val stage = TempIo.createTempDir("stamp-stage-")
-    try {
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.deleteIfExists(Paths.get(dest))
-      Files.move(part.toPath, Paths.get(dest))
-      Files.setLastModifiedTime(Paths.get(dest), FileTime.fromMillis(mtimeMs))
-    } finally TempIo.deleteRecursively(stage)
-  }
+  import FixtureStampSpec.writeSingleFile
 
   private def eventsFrame(n: Int, tsAsLongNanos: Boolean) = {
-    import spark.implicits._
     val base = spark.range(n.toLong).selectExpr(
       "id as event_id",
       "timestamp_micros(1700000000000000 + id * 1000000) as ts",
@@ -57,32 +46,66 @@ class FixtureStampSpec extends SparkTestBase {
     else base
   }
 
-  test("eventsFooterSchema invalidates on fixture regeneration under a non-file scheme") {
+  /** Runs `body` on a fresh local dir and its `mockdfs:` name. */
+  private def underMockDfs(prefix: String)(body: (String, String) => Unit): Unit = {
     spark.sparkContext.hadoopConfiguration.set("fs.mockdfs.impl",
       classOf[MockDfsFileSystem].getName)
-    val local = TempIo.createTempDir("stamp-footer-")
-    try {
-      val sfDir = "mockdfs:" + local
+    val local = TempIo.createTempDir(prefix)
+    try body(local, "mockdfs:" + local)
+    finally {
+      TempIo.deleteRecursively(local)
+      spark.sparkContext.hadoopConfiguration.unset("fs.mockdfs.impl")
+    }
+  }
+
+  test("Tables.table re-infers a regenerated fixture under mockdfs") {
+    underMockDfs("stamp-schema-") { (local, sfDir) =>
       // generation 1: ts physically TIMESTAMP (μs)
       writeSingleFile(eventsFrame(5, tsAsLongNanos = false),
         s"$local/events.parquet", 1000000000000L)
-      val s1 = Streaming.eventsFooterSchema(spark, sfDir)
+      val s1 = Tables.table(spark, sfDir, "events").schema
       assert(s1("ts").dataType == TimestampType)
-      // cached: same stamp, same object back
-      assert(Streaming.eventsFooterSchema(spark, sfDir) eq s1)
 
       // generation 2, SAME path, different encoding (long nanos) and a
-      // different pinned mtime — under mockdfs java.io.File reads 0:0
-      // for this path, so the pre-fix key could not tell the
-      // generations apart and would keep serving s1.
+      // different pinned mtime — java.io.File reads 0:0 for this path,
+      // so a stamp taken through it cannot tell the generations apart
       writeSingleFile(eventsFrame(5, tsAsLongNanos = true),
         s"$local/events.parquet", 1000000060000L)
-      val s2 = Streaming.eventsFooterSchema(spark, sfDir)
+      val s2 = Tables.table(spark, sfDir, "events").schema
       assert(s2("ts").dataType == LongType,
-        s"stale footer schema survived fixture regeneration: got $s2")
-    } finally {
-      TempIo.deleteRecursively(local)
-      spark.sparkContext.hadoopConfiguration.unset("fs.mockdfs.impl")
+        s"stale schema survived fixture regeneration: got $s2")
+    }
+  }
+
+  test("readEventsStream reads a regenerated fixture under mockdfs") {
+    /** (event_id, ts) of every row one AvailableNow run delivers. */
+    def streamed(sfDir: String): Seq[(Long, java.sql.Timestamp)] = {
+      val ckpt = TempIo.createTempDir("stamp-stream-ckpt-")
+      val rows = new ConcurrentLinkedQueue[(Long, java.sql.Timestamp)]
+      try {
+        Streaming.startStream(spark)(Streaming.readEventsStream(spark, sfDir).writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            batch.select("event_id", "ts").collect()
+              .foreach(r => rows.add((r.getLong(0), r.getTimestamp(1))))
+            ()
+          }
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())).awaitTermination()
+        rows.asScala.toSeq.sortBy(_._1)
+      } finally TempIo.deleteRecursively(ckpt)
+    }
+    underMockDfs("stamp-stream-") { (local, sfDir) =>
+      writeSingleFile(eventsFrame(5, tsAsLongNanos = false),
+        s"$local/events.parquet", 1000000000000L)
+      val first = streamed(sfDir)
+      assert(first.map(_._1) == (0L until 5L))
+      assert(first.head._2.toInstant.toEpochMilli == 1700000000000L)
+
+      // the same instants, now carried as long nanos
+      writeSingleFile(eventsFrame(5, tsAsLongNanos = true),
+        s"$local/events.parquet", 1000000060000L)
+      assert(streamed(sfDir) == first,
+        "the stream read a regenerated fixture with its old schema")
     }
   }
 
@@ -118,5 +141,24 @@ class FixtureStampSpec extends SparkTestBase {
   test("disorderedChunks rebuilds the carve when the source fixture changes") {
     assertRebuiltOnRegeneration("disorder", Streaming.eventsNormSchema)(
       Streaming.disorderedChunks(spark, _))
+  }
+}
+
+object FixtureStampSpec {
+
+  /** Write `df` as a single parquet FILE at `dest` (the fixture layout:
+    * each table is one file, not a directory) with a pinned mtime —
+    * explicit, strictly different stamps per regeneration, immune to
+    * filesystem timestamp granularity. */
+  def writeSingleFile(df: DataFrame, dest: String, mtimeMs: Long): Unit = {
+    val stage = TempIo.createTempDir("stamp-stage-")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.deleteIfExists(Paths.get(dest))
+      Files.move(part.toPath, Paths.get(dest))
+      Files.setLastModifiedTime(Paths.get(dest), FileTime.fromMillis(mtimeMs))
+    } finally TempIo.deleteRecursively(stage)
   }
 }

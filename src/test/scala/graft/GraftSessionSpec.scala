@@ -1,20 +1,11 @@
 package graft
 
-import java.io.File
-
 /** Pins [[GraftSession]] as the only place a SparkSession is built, and
   * reads its settings back from the shared test session. */
 class GraftSessionSpec extends SparkTestBase {
 
-  private def sources(d: File): Seq[File] =
-    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) sources(f)
-      else if (f.getName.endsWith(".scala") || f.getName.endsWith(".java")) Seq(f)
-      else Nil
-    }
-
   test("src/main and src/test build sessions only in GraftSession.scala") {
-    val files = Seq("src/main", "src/test").flatMap(d => sources(new File(d))).sortBy(_.getPath)
+    val files = Seq("src/main", "src/test").flatMap(SourceSweep.files).sortBy(_.getPath)
     assert(files.exists(_.getName == "GraftSession.scala"), "GraftSession.scala not found")
     // assembled so this file does not match itself
     val builder = Seq("SparkSession", "builder").mkString("\\.")

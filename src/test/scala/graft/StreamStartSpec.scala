@@ -106,15 +106,8 @@ class StreamStartSpec extends SparkTestBase {
     } finally jar.delete()
   }
 
-  private def sources(d: File): Seq[File] =
-    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) sources(f)
-      else if (f.getName.endsWith(".scala") || f.getName.endsWith(".java")) Seq(f)
-      else Nil
-    }
-
   private lazy val mainSources: Seq[File] = {
-    val files = sources(new File("src/main")).sortBy(_.getPath)
+    val files = SourceSweep.files("src/main")
     assert(files.exists(_.getName == "Streaming.scala"), "src/main not found")
     files
   }

@@ -208,17 +208,8 @@ class StreamingSpec extends SparkTestBase {
   test("checkpoint resume is exactly-once: re-running ingest adds no rows") {
     val out = Files.createTempDirectory("graft-ckpt-resume-").toString
     val checkpoint = Files.createTempDirectory("graft-ckpt-resume-ck-").toString
-    // the inline reader needs the same legacy-compat conf
-    // Tables.events/readEventsStream set, independent of which test ran
-    // first in the shared session; the footer probe supplies whatever
-    // physical ts encoding the fixture carries (projectIngest normalizes).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def run(): Long = {
-      val q = Streaming.projectIngest(
-          spark.readStream
-            .schema(Streaming.eventsFooterSchema(spark, sf))
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf))
+      val q = Streaming.projectIngest(Streaming.readEventsStream(spark, sf))
         .writeStream
         .format("parquet")
         .option("path", out)

@@ -699,7 +699,7 @@ object Dedup {
     * near-dup groups, not arbitrary graphs (the same property q67's
     * convergence relies on). Scale: each iteration is one distributed
     * join of the frontier against the (tiny, doubly-listed) edge set. */
-  def q119KhopReach(spark: SparkSession, sfDir: String): DataFrame = {
+  def q119KhopReach(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     // materialize the pair list ONCE: the recursion references the view
     // in its anchor and in every UnionLoop iteration, and a lazy view
     // would re-run the whole LSH pipeline per iteration (measured 4.6s
@@ -712,12 +712,10 @@ object Dedup {
     // max-clique-degree³ constant (near-dup clusters are small by
     // construction), but Spark's default cteRecursionRowLimit (10⁶)
     // is a fixture-scale artifact — the ×10 carve legitimately
-    // enumerates more walks than that. Raised SCOPED (q189's
-    // save/restore discipline) to a bound that still catches a
-    // runaway recursion long before memory does.
-    val limitKey = "spark.sql.cteRecursionRowLimit"
-    val prev = spark.conf.getOption(limitKey)
-    spark.conf.set(limitKey, "1000000000")
+    // enumerates more walks than that. Raised for this call only, to a
+    // bound that still catches a runaway recursion long before memory
+    // does.
+    s.conf(spark, "spark.sql.cteRecursionRowLimit" -> "1000000000")
     // evaluate INSIDE the conf scope (a lazy result would run under the
     // restored limit), and distributed — the result is one row per doc,
     // data-scale, so it goes through scratch parquet, not the driver
@@ -737,16 +735,10 @@ object Dedup {
            WHERE r.depth < 3)
          SELECT seed AS doc, count(DISTINCT node) - 1 AS n_reach3
          FROM reach GROUP BY seed ORDER BY doc""")
-    try {
-      val dir = TempIo.createTempDir("graft-q119-")
-      TempIo.deleteAtExit(dir)
-      reach.write.mode("overwrite").parquet(dir)
-      // re-pin the output order: parquet readback owes no row order
-      spark.read.parquet(dir).orderBy("doc")
-    } finally prev match {
-      case Some(v) => spark.conf.set(limitKey, v)
-      case None => spark.conf.unset(limitKey)
-    }
+    val dir = s.resultDir("graft-q119-")
+    reach.write.mode("overwrite").parquet(dir)
+    // re-pin the output order: parquet readback owes no row order
+    spark.read.parquet(dir).orderBy("doc")
   }
 
   def q119Sql: String =

@@ -44,22 +44,21 @@ object Formats {
     * end-to-end (schemas carried explicitly for the text formats). A
     * deterministic 5% slice keeps the triple write/read proportional to a
     * format check, not a full re-ingest — writer coverage is identical. */
-  def q49FormatsRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
+  def q49FormatsRoundtrip(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
     val base = Tables.events(spark, sfDir)
       .filter($"event_id" % 20 === 0)
       .select($"event_id", $"user_id", $"event_type", $"value")
-    val dir = Files.createTempDirectory("graft-formats-").toString
+    val dir = s.dir("graft-formats-")
     base.write.mode("overwrite").orc(s"$dir/orc")
     base.write.mode("overwrite").option("header", "true").csv(s"$dir/csv")
     base.write.mode("overwrite").json(s"$dir/json")
-    val counts = Seq(
+    // the counts force the reads, so the scratch dir can go with the scope
+    Seq(
       "csv" -> spark.read.option("header", "true").schema(base.schema).csv(s"$dir/csv").count(),
       "json" -> spark.read.schema(base.schema).json(s"$dir/json").count(),
       "orc" -> spark.read.orc(s"$dir/orc").count())
-    // the counts above already forced the reads; the scratch dir can go
-    TempIo.deleteRecursively(dir)
-    counts.toDF("format", "counts").orderBy($"format")
+      .toDF("format", "counts").orderBy($"format")
   }
 
   def q49Sql: String =
@@ -113,12 +112,12 @@ object Formats {
     * means small-file pressure is the scale risk — blobs ride
     * manifests or tar shards at 100 TB, exactly why q81's packing
     * exists). */
-  def q186BinarySource(spark: SparkSession, sfDir: String): DataFrame = {
+  def q186BinarySource(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
     val docs = Multimodal.withPayload(
       Tables.documents(spark, sfDir).filter($"doc_id" % 7 === 0))
       .select($"doc_id", $"source", $"payload")
-    val dir = Files.createTempDirectory("graft-blob-").toString
+    val dir = s.dir("graft-blob-")
     // Executor-side fixture write: payload bytes never cross the driver
     // (local[*] shares the filesystem; on a cluster `dir` would be a
     // shared store and this same foreachPartition writes per-executor).
@@ -138,9 +137,7 @@ object Formats {
       .agg(count(lit(1)).as("n_files"), sum($"length").as("total_bytes"),
         countDistinct($"digest").as("n_digests"))
       .orderBy($"source")
-    val out = TempIo.materialize(spark, result)
-    TempIo.deleteRecursively(dir)
-    out
+    TempIo.materialize(spark, result)
   }
 
   // octet_length(encode(..)) keeps the contract byte-exact — binaryFile's
@@ -163,9 +160,9 @@ object Formats {
     * byte-exact, not ASCII-dependent; the one-line-per-doc layout (no
     * embedded newlines in `text`) is a fixture contract asserted by
     * FormatsWave25Spec. */
-  def q187TextSource(spark: SparkSession, sfDir: String): DataFrame = {
+  def q187TextSource(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-text-").toString
+    val dir = s.dir("graft-text-")
     Tables.documents(spark, sfDir)
       .select($"text").write.mode("overwrite").text(dir)
     val lines = spark.read.text(dir)
@@ -173,9 +170,7 @@ object Formats {
       .select(octet_length($"value").as("n_bytes"))
       .agg(count(lit(1)).as("n_lines"), sum($"n_bytes").as("n_bytes"),
         countDistinct($"n_bytes").as("n_lengths"))
-    val out = TempIo.materialize(spark, result)
-    TempIo.deleteRecursively(dir)
-    out
+    TempIo.materialize(spark, result)
   }
 
   def q187Sql: String =
@@ -218,23 +213,18 @@ object Formats {
     * and "rewrite the table" at 100 TB. STATIC mode (the default)
     * would have truncated all 30 days first; the read-back aggregate
     * proves exactly one day changed and all others survived. */
-  def q189DynamicOverwrite(spark: SparkSession, sfDir: String): DataFrame = {
+  def q189DynamicOverwrite(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dyn-").toString
+    val dir = s.dir("graft-dyn-")
     val base = Tables.events(spark, sfDir)
       .select($"event_id", date_format($"ts", "yyyy-MM-dd").as("date"),
         Exact.cents($"value").as("cents"))
     base.write.mode("overwrite").partitionBy("date").parquet(dir)
     val day = base.agg(min($"date")).head().getString(0)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try base.filter($"date" === day)
+    s.conf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
+    base.filter($"date" === day)
       .withColumn("cents", $"cents" * 2L)
       .write.mode("overwrite").partitionBy("date").parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
     // partition-column type inference reads `date=` back as DATE; pin
     // the string form so the contract matches the writer's input
     val result = spark.read.parquet(dir)
@@ -243,9 +233,7 @@ object Formats {
       .agg(count(lit(1)).as("n"), sum($"cents").as("cents"))
       .withColumn("overwritten", $"date" === day)
       .orderBy($"date")
-    val out = TempIo.materialize(spark, result)
-    TempIo.deleteRecursively(dir)
-    out
+    TempIo.materialize(spark, result)
   }
 
   def q189Sql: String =
@@ -276,28 +264,26 @@ object Formats {
     * and hands it to the reader (`.schema(...)`), which this read path
     * degrades to verbatim. The write is the real cost here and stays
     * proportional to the slice. */
-  def q245SchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
+  def q245SchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val dir = TempIo.createTempDir("graft-evolve-")
-    try {
-      val ev = Tables.events(spark, sfDir)
-      ev.filter($"event_id" % 2 === 0)
-        .select($"event_id", $"event_type", $"value")
-        .write.mode("overwrite").parquet(s"$dir/v1")
-      ev.filter($"event_id" % 2 === 1)
-        .select($"event_id", $"event_type", $"value",
-          ($"user_id" % 16).as("hv"))
-        .write.mode("overwrite").parquet(s"$dir/v2")
-      val merged = spark.read.option("mergeSchema", "true")
-        .parquet(s"$dir/v1", s"$dir/v2")
-      TempIo.materialize(spark,
-        merged.groupBy($"event_type")
-          .agg(count(lit(1)).as("n_total"),
-            count($"hv").as("n_with_hv"),
-            coalesce(sum($"hv"), lit(0L)).as("sum_hv"),
-            Exact.sumExact($"value", 2).as("sum_value"))
-          .orderBy($"event_type"))
-    } finally TempIo.deleteRecursively(dir)
+    val dir = s.dir("graft-evolve-")
+    val ev = Tables.events(spark, sfDir)
+    ev.filter($"event_id" % 2 === 0)
+      .select($"event_id", $"event_type", $"value")
+      .write.mode("overwrite").parquet(s"$dir/v1")
+    ev.filter($"event_id" % 2 === 1)
+      .select($"event_id", $"event_type", $"value",
+        ($"user_id" % 16).as("hv"))
+      .write.mode("overwrite").parquet(s"$dir/v2")
+    val merged = spark.read.option("mergeSchema", "true")
+      .parquet(s"$dir/v1", s"$dir/v2")
+    TempIo.materialize(spark,
+      merged.groupBy($"event_type")
+        .agg(count(lit(1)).as("n_total"),
+          count($"hv").as("n_with_hv"),
+          coalesce(sum($"hv"), lit(0L)).as("sum_hv"),
+          Exact.sumExact($"value", 2).as("sum_value"))
+        .orderBy($"event_type"))
   }
 
   /** The merged read must equal computing the v2 column directly with
@@ -326,24 +312,22 @@ object Formats {
     *
     * Scale: both write and read are ordinary per-partition datasource
     * work; the aggregate is the only shuffle. */
-  def q268XmlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
+  def q268XmlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
     val base = Tables.events(spark, sfDir)
       .filter($"event_id" % 10 === 0)
       .select($"event_id", $"user_id", $"event_type", $"value")
-    val dir = Files.createTempDirectory("graft-xml-").toString
+    val dir = s.dir("graft-xml-")
     base.write.mode("overwrite").format("xml")
       .option("rowTag", "event").save(s"$dir/xml")
     val back = spark.read.format("xml")
       .option("rowTag", "event").schema(base.schema).load(s"$dir/xml")
-    val result = TempIo.materialize(spark,
+    TempIo.materialize(spark,
       back.groupBy($"event_type")
         .agg(count(lit(1)).as("counts"),
           sum($"event_id").as("sum_id"),
           Exact.sumExact($"value", 2).as("sum_value"))
         .orderBy($"event_type"))
-    TempIo.deleteRecursively(dir)
-    result
   }
 
   def q268Sql: String =

@@ -97,9 +97,9 @@ object Relational18 {
     * proof read from the files themselves. Range partitioning costs a
     * sample pass + full shuffle at write time — paid once, amortized
     * over every pruned read. */
-  def q191RangeLayout(spark: SparkSession, sfDir: String): DataFrame = {
+  def q191RangeLayout(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val dir = TempIo.createTempDir("graft-range-")
+    val dir = s.dir("graft-range-")
     Tables.events(spark, sfDir)
       .select($"event_id", $"ts", $"event_type")
       .repartitionByRange(RangeFiles, $"ts")
@@ -118,9 +118,7 @@ object Relational18 {
         (sum(when($"prev_mx" >= $"mn", 1L).otherwise(0L)) === 0L)
           .as("no_overlap"),
         (countDistinct($"f") === RangeFiles).as("file_count_ok"))
-    val out = TempIo.materialize(spark, audit)
-    TempIo.deleteRecursively(dir)
-    out
+    TempIo.materialize(spark, audit)
   }
 
   /** The oracle pins the layout CONTRACT: every row lands in exactly

@@ -161,10 +161,11 @@ object Relational20 {
        FROM winners GROUP BY 1, 2 ORDER BY know_week, valid_day"""
 
   /** Write the events stream date-partitioned (q140's layout) for the
-    * q200 fixture; caller owns deletion. */
-  private[graft] def writeDatePartitioned(spark: SparkSession, sfDir: String): String = {
+    * q200 fixture, in a dir of the caller's scope. */
+  private[graft] def writeDatePartitioned(spark: SparkSession, sfDir: String,
+      scope: Scope): String = {
     import spark.implicits._
-    val dir = TempIo.createTempDir("graft-dpp-")
+    val dir = scope.dir("graft-dpp-")
     Tables.events(spark, sfDir)
       .withColumn("date", date_format($"ts", "yyyy-MM-dd"))
       .repartition($"date")
@@ -201,12 +202,10 @@ object Relational20 {
     * the rest, without anyone hand-writing the date list. The oracle
     * reproduces the join from the unpartitioned original — equality
     * proves pruning lost no rows. */
-  def q200DynamicPruning(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = writeDatePartitioned(spark, sfDir)
-    val out = TempIo.materialize(spark, q200Join(spark, sfDir, dir))
-    TempIo.deleteRecursively(dir)
-    out
-  }
+  def q200DynamicPruning(spark: SparkSession, sfDir: String): DataFrame =
+    Scope.run { s =>
+      TempIo.materialize(spark, q200Join(spark, sfDir, writeDatePartitioned(spark, sfDir, s)))
+    }
 
   def q200Sql: String =
     """SELECT strftime(ts, '%Y-%m-%d') AS date,
@@ -217,41 +216,32 @@ object Relational20 {
        WHERE CAST(strftime(ts, '%d') AS INT) % 7 = 1
        GROUP BY 1 ORDER BY date"""
 
-  /** The q201 join with runtime-filter confs scoped (q189's
-    * save/restore discipline) — separate so the spec can assert the
-    * injected bloom filter in the optimized plan. The threshold
+  /** The q201 join with runtime-filter confs scoped to the call —
+    * separate so the spec can assert the injected bloom filter in the
+    * optimized plan. The threshold
     * overrides exist because the test corpus is tiny: at production
     * scale the defaults (10 GB application side) trigger on their own.
     * autoBroadcast is disabled so the join actually shuffles — the
     * regime the bloom filter exists for (a broadcast join would prune
     * via DPP/build-side keys instead). */
   private[graft] def q201Join(spark: SparkSession, sfDir: String)
-      (f: DataFrame => DataFrame): DataFrame = {
+      (f: DataFrame => DataFrame): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), "true")
-    spark.conf.set(keys(1), "0")
-    spark.conf.set(keys(2), "-1")
-    try {
-      val urgent = Tables.orders(spark, sfDir)
-        .filter($"o_orderpriority" === "1-URGENT")
-        .select($"o_orderkey", $"o_orderdate")
-      val joined = Tables.lineitem(spark, sfDir)
-        .select($"l_orderkey", $"l_extendedprice", $"l_returnflag")
-        .join(urgent, $"l_orderkey" === $"o_orderkey")
-        .groupBy($"l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum(Exact.cents($"l_extendedprice")).as("cents"))
-        .orderBy($"l_returnflag")
-      f(joined)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    s.conf(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val urgent = Tables.orders(spark, sfDir)
+      .filter($"o_orderpriority" === "1-URGENT")
+      .select($"o_orderkey", $"o_orderdate")
+    val joined = Tables.lineitem(spark, sfDir)
+      .select($"l_orderkey", $"l_extendedprice", $"l_returnflag")
+      .join(urgent, $"l_orderkey" === $"o_orderkey")
+      .groupBy($"l_returnflag")
+      .agg(count(lit(1)).as("n"),
+        sum(Exact.cents($"l_extendedprice")).as("cents"))
+      .orderBy($"l_returnflag")
+    f(joined)
   }
 
   /** q201 — runtime (bloom) join filter: the shuffle-join complement of

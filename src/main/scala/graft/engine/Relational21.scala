@@ -18,9 +18,9 @@ object Relational21 {
     * the exact quarantine set; the clean-row aggregate proves parsing
     * damage stayed confined to the corrupted lines. The corrupt column
     * carries the RAW line for replay — the quarantine contract. */
-  def q202CorruptRecords(spark: SparkSession, sfDir: String): DataFrame = {
+  def q202CorruptRecords(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val dir = TempIo.createTempDir("graft-corrupt-")
+    val dir = s.dir("graft-corrupt-")
     Tables.events(spark, sfDir)
       .select(concat_ws(",", $"event_id",
         when($"event_id" % 13 === 0, concat(lit("x"), $"event_id"))
@@ -48,9 +48,7 @@ object Relational21 {
         StructType(schema.fields.take(2)))
       .option("mode", "DROPMALFORMED").csv(dir)
       .agg(count($"cents").as("n_dropmalformed"))
-    val out = TempIo.materialize(spark, audit.crossJoin(dropped))
-    TempIo.deleteRecursively(dir)
-    out
+    TempIo.materialize(spark, audit.crossJoin(dropped))
   }
 
   def q202Sql: String =
@@ -73,12 +71,12 @@ object Relational21 {
     * interchange), and this query pins the engine-side contract that it
     * is ONLY a knob: results are bit-invariant to it. Completes q49
     * (format roundtrip) on the intra-format axis. */
-  def q203CodecRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
+  def q203CodecRoundtrip(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
     val base = Tables.events(spark, sfDir)
       .filter($"event_id" % 20 === 0)
       .select($"event_id", Exact.cents($"value").as("cents"))
-    val dir = TempIo.createTempDir("graft-codec-")
+    val dir = s.dir("graft-codec-")
     val counts = Codecs.map { codec =>
       base.write.mode("overwrite").option("compression", codec)
         .parquet(s"$dir/$codec")
@@ -87,10 +85,8 @@ object Relational21 {
         .head()
       (codec, back.getLong(0), back.getLong(1))
     }
-    val out = TempIo.materialize(spark,
+    TempIo.materialize(spark,
       counts.toDF("codec", "n", "cents").orderBy($"codec"))
-    TempIo.deleteRecursively(dir)
-    out
   }
 
   def q203Sql: String =

@@ -36,17 +36,12 @@ object Relational22 {
     * BroadcastNestedLoopJoin with the rule on, BNLJ without it, equal
     * rows both ways). The oracle runs the plain BETWEEN join — the
     * strongest statement that the rewrite is semantics-preserving.
-    * Conf and rule registration are scoped with q189's save/restore
-    * discipline. */
-  def q210RangeJoinRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val prev = spark.conf.getOption(RangeJoinRule.BinSizeKey)
+    * The bin-size conf is scoped to the call; the rule stays
+    * registered (it is inert without the conf). */
+  def q210RangeJoinRule(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     RangeJoinRule.register(spark)
-    spark.conf.set(RangeJoinRule.BinSizeKey, BinSize.toString)
-    try TempIo.materialize(spark, q210Join(spark, sfDir))
-    finally prev match {
-      case Some(v) => spark.conf.set(RangeJoinRule.BinSizeKey, v)
-      case None => spark.conf.unset(RangeJoinRule.BinSizeKey)
-    }
+    s.conf(spark, RangeJoinRule.BinSizeKey -> BinSize.toString)
+    TempIo.materialize(spark, q210Join(spark, sfDir))
   }
 
   def q210Sql: String =
@@ -90,25 +85,18 @@ object Relational22 {
     * integers (plan-asserted in Relational22Spec). The oracle runs the
     * plain BETWEEN join in DuckDB — the rewrite must be
     * semantics-preserving down to the hash. */
-  def q219TsRangeJoinRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val prev = spark.conf.getOption(RangeJoinRule.BinSizeKey)
+  def q219TsRangeJoinRule(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     RangeJoinRule.register(spark)
-    spark.conf.set(RangeJoinRule.BinSizeKey, TsBinSeconds.toString)
-    try {
-      // Evaluate INSIDE the rule/conf scope like q210 — but q219's
-      // result is one row PER INCIDENT (data-scale: the ×10 carve has
-      // ~198k error events, over TempIo.materialize's hard ceiling), so
-      // it round-trips through scratch parquet, distributed end to end,
-      // instead of the driver. Row order owes nothing to the readback —
-      // re-pinned by the trailing orderBy.
-      val dir = TempIo.createTempDir("graft-q219-")
-      TempIo.deleteAtExit(dir)
-      q219Join(spark, sfDir).write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir).orderBy("incident_id")
-    } finally prev match {
-      case Some(v) => spark.conf.set(RangeJoinRule.BinSizeKey, v)
-      case None => spark.conf.unset(RangeJoinRule.BinSizeKey)
-    }
+    s.conf(spark, RangeJoinRule.BinSizeKey -> TsBinSeconds.toString)
+    // Evaluate INSIDE the rule/conf scope like q210 — but q219's
+    // result is one row PER INCIDENT (data-scale: the ×10 carve has
+    // ~198k error events, over TempIo.materialize's hard ceiling), so
+    // it round-trips through scratch parquet, distributed end to end,
+    // instead of the driver. Row order owes nothing to the readback —
+    // re-pinned by the trailing orderBy.
+    val dir = s.resultDir("graft-q219-")
+    q219Join(spark, sfDir).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir).orderBy("incident_id")
   }
 
   def q219Sql: String =

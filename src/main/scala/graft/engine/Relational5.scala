@@ -98,9 +98,9 @@ object Relational5 {
       .withColumn("file_id", (($"rn" - 1) / perFile).cast("long"))
   }
 
-  def q92ZorderLayout(spark: SparkSession, sfDir: String): DataFrame = {
+  def q92ZorderLayout(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val dir = TempIo.createTempDir("graft-zorder-")
+    val dir = s.dir("graft-zorder-")
     // every row of one file_id hashes to ONE task, so each `file_id=`
     // directory receives exactly one parquet file — asserted below via
     // countDistinct(_metadata.file_name)
@@ -119,9 +119,7 @@ object Relational5 {
         min($"d2").as("d2_min"), max($"d2").as("d2_max"),
         (countDistinct($"fn") === 1L).as("one_file"))
       .orderBy($"file_id")
-    val out = TempIo.materialize(spark, audit)
-    TempIo.deleteRecursively(dir)
-    out
+    TempIo.materialize(spark, audit)
   }
 
   def q92Sql: String = {

@@ -29,29 +29,25 @@ object Relational57 {
     * Scale: the staged table scans one task per committed part file;
     * filter+projection work scales with the scanned partition, not
     * the driver; the aggregate is an ordinary 10-group fold. */
-  def q361GraftsourcePushdown(spark: SparkSession, sfDir: String): DataFrame = {
+  def q361GraftsourcePushdown(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val out = TempIo.createTempDir("graft-dsv2r-")
-    try {
-      Tables.lineitem(spark, sfDir)
-        .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"),
-          $"l_returnflag".as("flag"),
-          Exact.cents($"l_quantity").as("qc"),
-          Exact.cents($"l_extendedprice").as("pc"))
-        .write.format("graftsink").mode("append")
-        .option("path", out).save()
-      TempIo.materialize(spark,
-        spark.read.format("graftsink").load(out)
-          .filter($"flag" === "R" && $"qc" >= 2500L)
-          .select($"pk", $"pc", $"qc")
-          .groupBy(expr("pk % 10").as("residue"))
-          .agg(count(lit(1)).as("n_lines"),
-            sum($"pc").as("sum_price_cents"),
-            max($"qc").as("max_qty_cents"))
-          .orderBy($"residue"))
-    } finally {
-      TempIo.deleteRecursively(out)
-    }
+    val out = s.dir("graft-dsv2r-")
+    Tables.lineitem(spark, sfDir)
+      .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"),
+        $"l_returnflag".as("flag"),
+        Exact.cents($"l_quantity").as("qc"),
+        Exact.cents($"l_extendedprice").as("pc"))
+      .write.format("graftsink").mode("append")
+      .option("path", out).save()
+    TempIo.materialize(spark,
+      spark.read.format("graftsink").load(out)
+        .filter($"flag" === "R" && $"qc" >= 2500L)
+        .select($"pk", $"pc", $"qc")
+        .groupBy(expr("pk % 10").as("residue"))
+        .agg(count(lit(1)).as("n_lines"),
+          sum($"pc").as("sum_price_cents"),
+          max($"qc").as("max_qty_cents"))
+        .orderBy($"residue"))
   }
 
   def q361Sql: String =

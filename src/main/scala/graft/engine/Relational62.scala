@@ -27,26 +27,22 @@ object Relational62 {
     * Scale: this is THE connector contract that matters at 100 TB —
     * a grouped count/min/max over an external table moves one row per
     * (file, group) over the wire instead of every stored row. */
-  def q375GraftsourceAggPushdown(spark: SparkSession, sfDir: String): DataFrame = {
+  def q375GraftsourceAggPushdown(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val out = TempIo.createTempDir("graft-dsv2a-")
-    try {
-      Tables.events(spark, sfDir)
-        .select($"event_type".as("etype"), $"user_id".as("uid"),
-          Exact.cents($"value").as("cents"))
-        .write.format("graftsink").mode("append")
-        .option("path", out).save()
-      TempIo.materialize(spark,
-        spark.read.format("graftsink").load(out)
-          .groupBy($"etype")
-          .agg(count(lit(1)).as("n_events"),
-            count($"uid").as("n_users_nonnull"),
-            min($"cents").as("min_cents"),
-            max($"cents").as("max_cents"))
-          .orderBy($"etype"))
-    } finally {
-      TempIo.deleteRecursively(out)
-    }
+    val out = s.dir("graft-dsv2a-")
+    Tables.events(spark, sfDir)
+      .select($"event_type".as("etype"), $"user_id".as("uid"),
+        Exact.cents($"value").as("cents"))
+      .write.format("graftsink").mode("append")
+      .option("path", out).save()
+    TempIo.materialize(spark,
+      spark.read.format("graftsink").load(out)
+        .groupBy($"etype")
+        .agg(count(lit(1)).as("n_events"),
+          count($"uid").as("n_users_nonnull"),
+          min($"cents").as("min_cents"),
+          max($"cents").as("max_cents"))
+        .orderBy($"etype"))
   }
 
   def q375Sql: String =

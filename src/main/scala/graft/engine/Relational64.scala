@@ -28,29 +28,25 @@ object Relational64 {
     * time; the surviving scan is band-local. Clustering is the
     * writer's one-time sort — exactly the trade every lakehouse
     * OPTIMIZE makes. */
-  def q382ZonemapPruning(spark: SparkSession, sfDir: String): DataFrame = {
+  def q382ZonemapPruning(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val out = TempIo.createTempDir("graft-zm-")
-    try {
-      Tables.lineitem(spark, sfDir)
-        .select($"l_partkey".as("pk"),
-          Exact.cents($"l_quantity").as("qc"),
-          Exact.cents($"l_extendedprice").as("pc"))
-        .repartitionByRange(8, $"qc")
-        .write.format("graftsink").mode("append")
-        .option("path", out).save()
-      TempIo.materialize(spark,
-        spark.read.format("graftsink").load(out)
-          .filter($"qc" >= 4701L && $"qc" <= 5000L)
-          .groupBy(expr("pk % 10").as("residue"))
-          .agg(count(lit(1)).as("n_lines"),
-            sum($"pc").as("sum_price_cents"),
-            min($"qc").as("min_qty_cents"),
-            max($"qc").as("max_qty_cents"))
-          .orderBy($"residue"))
-    } finally {
-      TempIo.deleteRecursively(out)
-    }
+    val out = s.dir("graft-zm-")
+    Tables.lineitem(spark, sfDir)
+      .select($"l_partkey".as("pk"),
+        Exact.cents($"l_quantity").as("qc"),
+        Exact.cents($"l_extendedprice").as("pc"))
+      .repartitionByRange(8, $"qc")
+      .write.format("graftsink").mode("append")
+      .option("path", out).save()
+    TempIo.materialize(spark,
+      spark.read.format("graftsink").load(out)
+        .filter($"qc" >= 4701L && $"qc" <= 5000L)
+        .groupBy(expr("pk % 10").as("residue"))
+        .agg(count(lit(1)).as("n_lines"),
+          sum($"pc").as("sum_price_cents"),
+          min($"qc").as("min_qty_cents"),
+          max($"qc").as("max_qty_cents"))
+        .orderBy($"residue"))
   }
 
   def q382Sql: String =

@@ -281,14 +281,13 @@ object Relational7 {
     * pure waste. Broadcast is disabled for the join so the co-location
     * (not a small-side copy) is what eliminates the shuffle.
     *
-    * The scratch warehouse is reclaimed inside the query (TempIo
-    * contract, as q49/q63/q86). */
-  def q116BucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
+    * The scratch warehouse and the broadcast override belong to the
+    * call's [[Scope]]; the two catalog tables are dropped in `finally`. */
+  def q116BucketedJoin(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val wh = TempIo.createTempDir("graft-q116-")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val wh = s.dir("graft-q116-")
+    s.conf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       Bucketing.writeBucketed(
         Tables.lineitem(spark, sfDir).select($"l_orderkey", $"l_quantity"),
         "graft_q116_li", s"$wh/li", "l_orderkey", 8)
@@ -304,10 +303,8 @@ object Relational7 {
         .orderBy($"o_orderpriority")
       TempIo.materialize(spark, agg)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS graft_q116_li")
       spark.sql("DROP TABLE IF EXISTS graft_q116_o")
-      TempIo.deleteRecursively(wh)
     }
   }
 

@@ -323,12 +323,12 @@ object Relational9 {
     * (32 shuffle tasks would otherwise each drop a sliver into every
     * directory — 30× the files, same bytes, slower listings).
     *
-    * The scratch copy is materialized+deleted inside the query
-    * (q49's contract); the oracle reproduces the week from the
+    * The scratch copy is materialized inside the query and deleted by
+    * its call [[Scope]]; the oracle reproduces the week from the
     * unpartitioned original — equality proves pruning lost no rows. */
-  def q140PartitionPruning(spark: SparkSession, sfDir: String): DataFrame = {
+  def q140PartitionPruning(spark: SparkSession, sfDir: String): DataFrame = Scope.run { s =>
     import spark.implicits._
-    val dir = TempIo.createTempDir("graft-prune-")
+    val dir = s.dir("graft-prune-")
     Tables.events(spark, sfDir)
       .withColumn("date", date_format($"ts", "yyyy-MM-dd"))
       .repartition($"date")
@@ -340,9 +340,7 @@ object Relational9 {
       .agg(count(lit(1)).as("counts"),
         Exact.sumExact($"value", 2).as("sum_value"))
       .orderBy($"date")
-    val out = TempIo.materialize(spark, pruned)
-    TempIo.deleteRecursively(dir)
-    out
+    TempIo.materialize(spark, pruned)
   }
 
   def q140Sql: String =

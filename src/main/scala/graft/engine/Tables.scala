@@ -209,18 +209,12 @@ object Tables {
         // contract drift, and must flag by name here rather than NPE in
         // the getDouble/getDate extraction.
         ensureNanosAsLong(spark) // legacy NANOS footers reject without it
-        val pdKey = "spark.sql.parquet.aggregatePushDown"
-        val pdPrev = spark.conf.getOption(pdKey)
-        spark.conf.set(pdKey, "true")
-        val (evRow, shipRow) =
-          try (
-            table(spark, sfDir, "events").agg(min(col("value"))).head,
+        val (evRow, shipRow) = Scope.run { s =>
+          s.conf(spark, "spark.sql.parquet.aggregatePushDown" -> "true")
+          (table(spark, sfDir, "events").agg(min(col("value"))).head,
             table(spark, sfDir, "lineitem").agg(min(col("l_shipdate")).as("m"))
               .select(to_date(col("m"))).head)
-          finally pdPrev match {
-            case Some(v) => spark.conf.set(pdKey, v)
-            case None => spark.conf.unset(pdKey)
-          }
+        }
         (if (evRow.isNullAt(0))
           Seq("events: table is empty — value-domain pins cannot be checked")
         else if (evRow.getDouble(0) < 0.0)

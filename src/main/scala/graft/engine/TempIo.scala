@@ -1,18 +1,27 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Scratch-directory lifecycle for queries that prove a write/read
-  * roundtrip (q49 formats, q63 ingest sink, q86 foreachBatch store).
-  * Bench runs every query at least twice, so sink scratch space must be
-  * reclaimed inside the query itself or /tmp accretes a copy of the
-  * corpus per run. */
+/** Scratch-directory primitives under the call [[Scope]], which owns
+  * every query-scoped dir (the batch roundtrips, the stream sinks and
+  * checkpoints of [[graft.streaming.Replay]]). Bench runs every query
+  * at least twice, so scratch space must be reclaimed by the call
+  * itself or /tmp accretes a copy of the corpus per run. */
 object TempIo {
 
+  /** A fresh, uniquely named dir under `java.io.tmpdir`, open to its
+    * owner only, as the JDK's temp-dir factory makes one. Query code
+    * takes its dirs from a [[Scope]]; only the JVM-lifetime memos
+    * (`Carve`, `Loops`) call this directly. */
   def createTempDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    Files.createDirectory(
+      Paths.get(System.getProperty("java.io.tmpdir"), prefix + UUID.randomUUID()),
+      PosixFilePermissions.asFileAttribute(PosixFilePermissions.fromString("rwx------"))
+    ).toString
 
   def deleteRecursively(path: String): Unit = {
     def rm(f: java.io.File): Unit = {

@@ -192,34 +192,23 @@ object Sessionize {
   /** Streaming sessionization via `transformWithState` — same contract
     * and oracle as q39/q40, on the state-v2 API. Requires the RocksDB
     * state store provider (the HDFS-backed default does not implement
-    * v2 state); scoped to this query and restored after. */
+    * v2 state); scoped to this query by [[Streaming.withRocksDb]]. */
   def q96TransformWithState(spark: SparkSession, sfDir: String): DataFrame =
-      Streaming.withStatePartitions(spark) {
+      Streaming.withStatePartitions(spark)(Streaming.withRocksDb(spark) {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events = Streaming.readEventsStream(spark, sfDir)
-        .select($"user_id", $"ts", $"event_id")
-        .as[Ev]
-      val sessions = events
-        .groupByKey(_.user_id)
-        .transformWithState(new SessionProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append(),
-          implicitly[org.apache.spark.sql.Encoder[Session]])
-      // sessions are row-scale → file-sink drain (see q40); the sink
-      // parquet backs the lazy result, so no driver materialization
-      sessionOutput(Streaming.drainToFileSink(spark, sessions.toDF()))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
+    val events = Streaming.readEventsStream(spark, sfDir)
+      .select($"user_id", $"ts", $"event_id")
+      .as[Ev]
+    val sessions = events
+      .groupByKey(_.user_id)
+      .transformWithState(new SessionProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Append(),
+        implicitly[org.apache.spark.sql.Encoder[Session]])
+    // sessions are row-scale → file-sink drain (see q40); the sink
+    // parquet backs the lazy result, so no driver materialization
+    sessionOutput(Streaming.drainToFileSink(spark, sessions.toDF()))
+  })
 
   /** The FOURTH sessionization formulation: Spark's native
     * `session_window` grouping function — sessions become a merging

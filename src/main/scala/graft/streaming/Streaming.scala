@@ -6,7 +6,7 @@ import org.apache.spark.sql.graftbridge.ArtifactBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types._
 
-import graft.engine.{Tables, TempIo}
+import graft.engine.{Scope, Tables, TempIo}
 
 /** Structured Streaming surface — the reference's ingest pipeline
   * (consumer.scala:44-83) re-expressed over the `events` table, plus the
@@ -38,32 +38,28 @@ object Streaming {
     * (partition × store) pays snapshot/commit/maintenance overhead, so
     * 32-way parallelism over ~10^5 state rows is pure overhead (measured
     * on the stream-stream join at sf0.1: 79s at 32 partitions vs 3.9s at
-    * 4). At 100 TB with ~10^9 state rows this knob goes UP accordingly —
+    * 4). At 100 TB with ~10^9 state rows this width goes UP accordingly —
     * the point is that it tracks state size, independently of the
     * stateless queries' parallelism. */
-  private[graft] def withStatePartitions[T](spark: org.apache.spark.sql.SparkSession,
-      n: Int = 4)(body: => T): T = {
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", n.toString)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private val StatePartitions = "4"
+
+  /** Runs `body` with the shuffle (= state store) width scoped to
+    * [[StatePartitions]]. */
+  private[graft] def withStatePartitions[T](spark: SparkSession)(body: => T): T =
+    Scope.run { s =>
+      s.conf(spark, "spark.sql.shuffle.partitions" -> StatePartitions)
+      body
+    }
 
   /** Runs `body` on the RocksDB state store — the provider the
-    * state-v2 (transformWithState) queries require — and restores the
-    * caller's provider setting afterwards (unset stays unset). */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    * state-v2 (transformWithState) queries require — and gives the
+    * caller's provider setting back afterwards. */
+  private[graft] def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    Scope.run { s =>
+      s.conf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      body
     }
-  }
 
   private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
   private val startLock = new Object
@@ -82,8 +78,8 @@ object Streaming {
     * isolation off on the parent around that call alone leaves the
     * stream's jobs unstamped: they run under the executor's default
     * loader and hit the JVM-wide cache on every later run. The caller's
-    * value is restored in `finally` (unset stays unset), the way
-    * [[withStatePartitions]] scopes the shuffle width, and starts are
+    * value is given back by a call [[Scope]] (unset stays unset), the
+    * way [[withStatePartitions]] scopes the shuffle width, and starts are
     * serialized so concurrent callers never capture each other's
     * temporary value. A session that has added session-scoped artifacts
     * keeps isolation, because those classes live only in its loader.
@@ -96,15 +92,10 @@ object Streaming {
   private[graft] def startStream[T](spark: SparkSession)(
       writer: DataStreamWriter[T]): StreamingQuery =
     if (ArtifactBridge.sessionArtifactAdded(spark)) writer.start()
-    else startLock.synchronized {
-      val prev = spark.conf.getAll.get(ArtifactIsolation)
-      spark.conf.set(ArtifactIsolation, "false")
-      try writer.start()
-      finally prev match {
-        case Some(v) => spark.conf.set(ArtifactIsolation, v)
-        case None => spark.conf.unset(ArtifactIsolation)
-      }
-    }
+    else startLock.synchronized(Scope.run { s =>
+      s.conf(spark, ArtifactIsolation -> "false")
+      writer.start()
+    })
 
   /** Files-per-trigger for the chunk-replay queries whose results are
     * PROVABLY batching-invariant (r15, guide §1.2 step 1 — cut

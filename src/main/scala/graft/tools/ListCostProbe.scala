@@ -5,6 +5,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.engine.Scope
 import graft.sources.GraftMicroBatchStream
 
 /** Measures the graftsink streaming source's per-trigger DISCOVERY cost
@@ -32,9 +33,9 @@ import graft.sources.GraftMicroBatchStream
 object ListCostProbe {
   def main(args: Array[String]): Unit = {
     val epochs = args.headOption.map(_.toInt).getOrElse(10000)
-    val table = Files.createTempDirectory("graft-listcost-").toFile
-    val ckpt = Files.createTempDirectory("graft-listcost-ckpt-").toFile
-    try {
+    Scope.run { scope =>
+      val table = new File(scope.dir("graft-listcost-"))
+      val ckpt = new File(scope.dir("graft-listcost-ckpt-"))
       def addEpoch(i: Int): Unit = {
         val d = new File(table, s"epoch-probe-$i")
         d.mkdirs()
@@ -67,29 +68,24 @@ object ListCostProbe {
       // resident map is bounded by the window while absolute offsets
       // stay stable (retired dirs persist as one skip-set NAME per
       // commit dir, not per file).
-      val logBase = Files.createTempDirectory("graft-alogmem-").toFile
-      try {
-        def fill(retain: Long, label: String): Unit = {
-          val d = new File(logBase, s"ret-$retain")
-          val log = new graft.sources.ArrivalLog(
-            new org.apache.hadoop.fs.Path(d.toURI),
-            org.apache.hadoop.fs.FileSystem
-              .getLocal(new org.apache.hadoop.conf.Configuration()).getRaw,
-            compactInterval = 100, retainMaxEntries = retain)
-          (0 until 10000).foreach { e =>
-            log.append((0 until 10).map(i =>
-              s"epoch-probe-$e/part-0000$i-of-a-realistic-length-name.graft"))
-            log.committed((e + 1) * 10L)
-          }
-          val (res, chars, skips) = log.residentStats
-          println(f"$res%9d entries ($chars%9d chars) + $skips%6d skip names resident  $label (size=${log.size})")
+      val logBase = new File(scope.dir("graft-alogmem-"))
+      def fill(retain: Long, label: String): Unit = {
+        val d = new File(logBase, s"ret-$retain")
+        val log = new graft.sources.ArrivalLog(
+          new org.apache.hadoop.fs.Path(d.toURI),
+          org.apache.hadoop.fs.FileSystem
+            .getLocal(new org.apache.hadoop.conf.Configuration()).getRaw,
+          compactInterval = 100, retainMaxEntries = retain)
+        (0 until 10000).foreach { e =>
+          log.append((0 until 10).map(i =>
+            s"epoch-probe-$e/part-0000$i-of-a-realistic-length-name.graft"))
+          log.committed((e + 1) * 10L)
         }
-        fill(Long.MaxValue, "retention OFF: O(total) names for the stream's lifetime")
-        fill(10000L, "logRetainMaxEntries=10000: resident bounded by the window")
-      } finally graft.engine.TempIo.deleteRecursively(logBase.getAbsolutePath)
-    } finally {
-      graft.engine.TempIo.deleteRecursively(table.getAbsolutePath)
-      graft.engine.TempIo.deleteRecursively(ckpt.getAbsolutePath)
+        val (res, chars, skips) = log.residentStats
+        println(f"$res%9d entries ($chars%9d chars) + $skips%6d skip names resident  $label (size=${log.size})")
+      }
+      fill(Long.MaxValue, "retention OFF: O(total) names for the stream's lifetime")
+      fill(10000L, "logRetainMaxEntries=10000: resident bounded by the window")
     }
   }
 }

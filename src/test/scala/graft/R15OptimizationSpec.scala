@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.DistRank
+import graft.engine.{DistRank, Scope}
 
 /** Round-15 optimization pins: the binary-search bucket assignment must
   * equal the interpreted fold it replaced (duplicates, nulls, empty
@@ -45,17 +45,13 @@ class R15OptimizationSpec extends SparkTestBase {
     val reference = df
       .withColumn("rk", row_number().over(Window.orderBy($"k", $"ok")).cast("long"))
       .orderBy($"ok").collect().map(r => (r.getLong(0), r.getLong(2)))
-    val prev = spark.conf.getOption(DistRank.RowsPerBucketConf)
-    try {
+    Scope.run { s =>
       for (target <- Seq("64", "999999999999")) { // many buckets vs floor-16
-        spark.conf.set(DistRank.RowsPerBucketConf, target)
+        s.conf(spark, DistRank.RowsPerBucketConf -> target)
         val got = DistRank.withRank(df, "k", "ok", "rk", desc = false)
           .orderBy($"ok").collect().map(r => (r.getLong(0), r.getLong(2)))
         assert(got.toSeq === reference.toSeq, s"rowsPerBucket=$target")
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(DistRank.RowsPerBucketConf, v)
-      case None => spark.conf.unset(DistRank.RowsPerBucketConf)
     }
   }
 

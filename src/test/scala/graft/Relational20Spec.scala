@@ -64,15 +64,14 @@ class Relational20Spec extends SparkTestBase {
   }
 
   test("q200 fact scan carries a dynamic partition pruning filter") {
-    val dir = Relational20.writeDatePartitioned(spark, sf)
-    try {
-      val df = Relational20.q200Join(spark, sf, dir)
+    graft.engine.Scope.run { s =>
+      val df = Relational20.q200Join(spark, sf, Relational20.writeDatePartitioned(spark, sf, s))
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("dynamicpruning"),
         "the dim subquery must prune the partitioned fact scan at runtime:\n" + p)
       // and the prune actually restricts the partition count: 5 of 30 days
       assert(df.collect().length == 5)
-    } finally graft.engine.TempIo.deleteRecursively(dir)
+    }
   }
 
   test("q201 injects a runtime bloom filter on the shuffle-join fact side") {

@@ -17,12 +17,6 @@ import graft.streaming.Streaming
   * inside the batch. */
 class ReplaySpec extends SparkTestBase {
 
-  /** Scratch dirs the engine makes (`graft-*`), plus the `temporary-*`
-    * checkpoints Spark makes for a stream that names none. */
-  private def scratchDirs: Set[String] =
-    Option(new File(System.getProperty("java.io.tmpdir")).list()).toSet.flatten
-      .filter(n => n.startsWith("graft-") || n.startsWith("temporary-"))
-
   /** A 40-row events fixture whose `event_type` is an integer, with its
     * disordered carve already built: the carve is a memo that outlives
     * any one query, so it is not the failing query's scratch. */

@@ -7,6 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Scratch dirs the engine makes (`graft-*`), plus the `temporary-*`
+    * checkpoints Spark makes for a stream that names none: a snapshot
+    * before and after a failing call shows what it leaked. */
+  def scratchDirs: Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSet.flatten
+      .filter(n => n.startsWith("graft-") || n.startsWith("temporary-"))
 }
 
 object SparkTestBase {

@@ -162,44 +162,33 @@ class Wave41Spec extends SparkTestBase {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType)))
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val out = Streaming.withStatePartitions(spark) {
-          val sessions = spark.readStream
-            .schema(chunkSchema)
-            .option("pathGlobFilter", "chunk*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .withWatermark("ts", s"${Streaming.TimerDelayHours} hours")
-            .select($"user_id", unix_micros($"ts").as("tus"), $"event_id")
-            .as[(Long, Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new Streaming.TimerSessionProcessor,
-              org.apache.spark.sql.streaming.TimeMode.EventTime(),
-              org.apache.spark.sql.streaming.OutputMode.Append(),
-              implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long, Long)]])
-          val q = sessions.toDF("user_id", "n_events", "start_us", "end_us")
-            .writeStream.outputMode("append").format("memory")
-            .queryName("timer_spec") // 1-row bounded test frame
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          spark.table("timer_spec").collect()
-        }
-        assert(out.length === 1, s"exactly user 1's session fires: ${out.toSeq}")
-        val r = out.head
-        assert(r.getLong(0) === 1L && r.getLong(1) === 2L &&
-          r.getLong(2) === day0 && r.getLong(3) === day0 + 600000000L,
-          s"timer must emit the abandoned 2-event session verbatim, got $r")
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(providerKey, v)
-          case None => spark.conf.unset(providerKey)
-        }
-      }
+      val out = Streaming.withStatePartitions(spark)(Streaming.withRocksDb(spark) {
+        val sessions = spark.readStream
+          .schema(chunkSchema)
+          .option("pathGlobFilter", "chunk*.parquet")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(src)
+          .withWatermark("ts", s"${Streaming.TimerDelayHours} hours")
+          .select($"user_id", unix_micros($"ts").as("tus"), $"event_id")
+          .as[(Long, Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new Streaming.TimerSessionProcessor,
+            org.apache.spark.sql.streaming.TimeMode.EventTime(),
+            org.apache.spark.sql.streaming.OutputMode.Append(),
+            implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long, Long)]])
+        val q = sessions.toDF("user_id", "n_events", "start_us", "end_us")
+          .writeStream.outputMode("append").format("memory")
+          .queryName("timer_spec") // 1-row bounded test frame
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        spark.table("timer_spec").collect()
+      })
+      assert(out.length === 1, s"exactly user 1's session fires: ${out.toSeq}")
+      val r = out.head
+      assert(r.getLong(0) === 1L && r.getLong(1) === 2L &&
+        r.getLong(2) === day0 && r.getLong(3) === day0 + 600000000L,
+        s"timer must emit the abandoned 2-event session verbatim, got $r")
     } finally graft.engine.TempIo.deleteRecursively(src)
   }
 
